@@ -126,21 +126,46 @@ object Bench {
   /** Extract a named `{"qNN_...": seconds, ...}` object of a
     * bench-summary-shaped JSON text (brace-matching, same grammar as
     * the `"queries"` map — also used for the reference file's
-    * `"serial_canaries"` object). */
+    * `"serial_canaries"` object). The object is the value of the key at
+    * brace depth 1 followed by `:` and `{`; the same quoted name inside a
+    * string value (e.g. the reference's `"note"`) or deeper in the
+    * document is not it. */
   private[graft] def parseNamedTimes(txt: String, objKey: String): Map[String, Double] = {
     // \s* after the colon: the committed reference is pretty-printed
     val qSec = """"(q[0-9][A-Za-z0-9_]*)":\s*([0-9]+\.?[0-9]*)""".r
-    val key = txt.indexOf("\"" + objKey + "\"")
-    // a text WITHOUT a "queries" object must parse empty, not scan from
-    // offset 0 — e.g. the compact summary line carries q-named DRIFT
-    // RATIOS that would otherwise be returned as reference seconds
-    if (key < 0) return Map.empty
-    val start = txt.indexOf('{', key)
-    if (start < 0) return Map.empty
+    // index just past the string literal opening at `i` (escapes skipped)
+    def stringEnd(i: Int): Int = {
+      var j = i + 1
+      while (j < txt.length && txt(j) != '"') j += (if (txt(j) == '\\') 2 else 1)
+      j + 1
+    }
+    def skipWs(i: Int): Int = { var j = i; while (j < txt.length && txt(j).isWhitespace) j += 1; j }
+    // a text WITHOUT the object must parse empty, not scan from offset 0
+    // — e.g. the compact summary line carries q-named DRIFT RATIOS that
+    // would otherwise be returned as reference seconds
     var depth = 0
-    var end = start
-    while (end < txt.length && { if (txt(end) == '{') depth += 1 else if (txt(end) == '}') depth -= 1; depth > 0 }) end += 1
-    if (depth != 0) return Map.empty // unbalanced braces: refuse, don't throw
+    var start = -1
+    var end = -1
+    var i = 0
+    while (i < txt.length && end < 0) txt(i) match {
+      case '"' =>
+        val close = stringEnd(i)
+        if (start < 0 && depth == 1 && txt.slice(i + 1, close - 1) == objKey) {
+          val colon = skipWs(close)
+          if (colon < txt.length && txt(colon) == ':') {
+            val brace = skipWs(colon + 1)
+            if (brace < txt.length && txt(brace) == '{') start = brace
+          }
+        }
+        i = close
+      case '{' => depth += 1; i += 1
+      case '}' =>
+        depth -= 1
+        if (start >= 0 && depth == 1) end = i
+        i += 1
+      case _ => i += 1
+    }
+    if (end < 0) return Map.empty // absent key or unbalanced braces: refuse, don't throw
     qSec.findAllMatchIn(txt.substring(start, end + 1))
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }

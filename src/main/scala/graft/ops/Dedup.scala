@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.readers.Resolve
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -981,7 +982,7 @@ object Dedup {
     // prevent). Such an index stays legacy/unvalidated; rebuild with
     // mode="overwrite" to adopt a recipe.
     val legacyAppend = appending && readIndexRecipe(path, conf).isEmpty &&
-      pathHasIndexData(path, conf)
+      Resolve.listing(path, conf).files.nonEmpty
     if (appending)
       requireRecipe(path, shingleN, k, seed, Some(idCol), conf)
     if (legacyAppend) {
@@ -1020,8 +1021,8 @@ object Dedup {
     // must prove the old files are untouched, not merely that files
     // exist (ADVICE r21 — a mid-job failure can leave partially
     // committed NEW part-files behind)
-    val preListing: Seq[(String, Long, Long)] =
-      if (oldSidecarText.isDefined) indexDataListing(path, conf) else Seq.empty
+    val preListing: Option[Resolve.Listing] =
+      oldSidecarText.map(_ => Resolve.listing(path, conf))
     try {
       withMinhashSignature(corpus.select(col(idCol), col(textCol)), textCol, "sig",
         shingleN, k, seed)
@@ -1031,12 +1032,14 @@ object Dedup {
       case e: Throwable =>
         // restore the old recipe ONLY if the old data demonstrably
         // survived UNTOUCHED — the post-failure listing must equal the
-        // pre-write snapshot (a cleared directory, partial new
-        // part-files, or any other mutation stays bare/fail-open:
+        // pre-write snapshot, and the snapshot must not be racy (a file
+        // written within one mtime tick of it could be rewritten with
+        // the same name, length and mtime). A cleared directory, partial
+        // new part-files, or any other mutation stays bare/fail-open:
         // stamping a recipe over changed data would be exactly the
-        // false-green state the sidecar prevents)
+        // false-green state the sidecar prevents
         oldSidecarText.foreach { txt =>
-          if (preListing.nonEmpty && indexDataListing(path, conf) == preListing)
+          if (preListing.exists(_.unchangedIn(Resolve.listing(path, conf))))
             writeSidecarText(sidecarPath(path), txt, conf)
         }
         throw e
@@ -1051,39 +1054,6 @@ object Dedup {
     else if (!appending || readIndexRecipe(path, conf).isEmpty)
       writeSidecarText(sidecarPath(path), recipe.sidecarJson, conf)
     recipe
-  }
-
-  /** True when `path` already holds index DATA (any non-hidden,
-    * non-sidecar file) — the legacy-append guard's pre-write probe. */
-  private[ops] def pathHasIndexData(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = hadoopFs(p, conf)
-    f.exists(p) && f.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Listing fingerprint of `path`'s index DATA files — (name, length,
-    * mtime) of every non-hidden file, sorted. The failed-overwrite
-    * restore snapshots this BEFORE deleting the old sidecar and
-    * re-stamps the old recipe only when the post-failure listing is
-    * IDENTICAL: a bare "has data" probe reads partially committed NEW
-    * part-files (direct / v2 committers move task output into the
-    * destination before job commit) as "the old data survived" and
-    * would validate the old recipe over mixed data — the exact
-    * false-green state the sidecar protocol forbids (ADVICE r21).
-    */
-  private[graft] def indexDataListing(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = hadoopFs(p, conf)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.collect {
-      case st if !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".") =>
-        (st.getPath.getName, st.getLen, st.getModificationTime)
-    }.sorted
   }
 
   // sidecar I/O goes through the Hadoop FileSystem API of the CALLING
@@ -1371,20 +1341,69 @@ object Dedup {
     * `interruptOnCancel`, inside `blocking{}` (the global pool spawns a
     * replacement thread instead of starving — ADVICE r21); `cancel()`
     * kills exactly those jobs when a sibling chain fails, and `await()`
-    * rethrows the body's failure.
+    * rethrows the body's failure. A `cancel()` that lands before the body
+    * submits its jobs still stops them: a cancelled body does not start;
+    * the group is cancelled for future jobs too, so a job the body submits
+    * afterwards fails at submission; and [[EagerCancelGuard]] fails the
+    * planning of every query the body issues afterwards, because Spark
+    * does not consult cancelled groups for the shuffle map stages that
+    * adaptive execution submits on its own.
     */
   private[graft] def eagerOverlap[T](spark: org.apache.spark.sql.SparkSession, desc: String)(body: => T): EagerHandle[T] = {
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     val sc = spark.sparkContext
+    EagerCancelGuard.install(spark)
     val group = s"graft-eager-${java.util.UUID.randomUUID()}"
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    eagerGroups.put(group, cancelled)
     val f = Future {
       // job group is thread-local: tag the background jobs so
       // cancel() can reach exactly them
       sc.setJobGroup(group, desc, interruptOnCancel = true)
-      try blocking(body) finally sc.clearJobGroup()
+      try {
+        if (cancelled.get) throw new java.util.concurrent.CancellationException(s"$desc: cancelled")
+        blocking(body)
+      } finally {
+        sc.clearJobGroup()
+        eagerGroups.remove(group)
+      }
     }(ExecutionContext.global)
-    new EagerHandle(() => Await.result(f, Duration.Inf), () => sc.cancelJobGroup(group))
+    new EagerHandle(() => Await.result(f, Duration.Inf), () => {
+      cancelled.set(true)
+      sc.cancelJobGroupAndFutureJobs(group)
+    })
+  }
+
+  /** Job groups of running [[eagerOverlap]] bodies and their cancelled flags. */
+  private val eagerGroups =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicBoolean]()
+
+  /** Planner hook: fails the planning of a query issued under a cancelled
+    * [[eagerOverlap]] group. Planning and every adaptive re-planning run
+    * on the submitting thread before the query's stages are submitted,
+    * so this is the check before each launch; it adds nothing to a plan. */
+  private final class EagerCancelGuard(sc: org.apache.spark.SparkContext)
+      extends org.apache.spark.sql.execution.SparkStrategy {
+    def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      if (!eagerGroups.isEmpty) {
+        val g = sc.getLocalProperty("spark.jobGroup.id")
+        if (g != null && Option(eagerGroups.get(g)).exists(_.get))
+          throw new java.util.concurrent.CancellationException(s"eager job group $g was cancelled")
+      }
+      Nil
+    }
+  }
+
+  private object EagerCancelGuard {
+    def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+      val exp = spark.experimental
+      exp.synchronized {
+        if (!exp.extraStrategies.exists(_.isInstanceOf[EagerCancelGuard]))
+          exp.extraStrategies = exp.extraStrategies :+ new EagerCancelGuard(spark.sparkContext)
+      }
+    }
   }
 
   /** Day-2 cluster maintenance: assign a new batch's docs to a

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorFunctions
+import graft.readers.Resolve
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -867,7 +868,7 @@ object Similarity {
       s"writeVectorIndex: mode '$mode' not supported — append | overwrite | errorifexists")
     val appending = mode.equalsIgnoreCase("append")
     val legacyAppend = appending && readVectorIndexRecipe(path, conf).isEmpty &&
-      Dedup.pathHasIndexData(path, conf)
+      Resolve.listing(path, conf).files.nonEmpty
     if (appending) requireVectorRecipe(path, recipe, conf)
     if (legacyAppend) {
       // no sidecar to validate against — but appending (idCol,
@@ -901,8 +902,8 @@ object Similarity {
       } else None
     // pre-write listing snapshot: restore only over provably untouched
     // data — same contract as [[Dedup.writeSignatureIndex]] (ADVICE r21)
-    val preListing: Seq[(String, Long, Long)] =
-      if (oldSidecarText.isDefined) Dedup.indexDataListing(path, conf) else Seq.empty
+    val preListing: Option[Resolve.Listing] =
+      oldSidecarText.map(_ => Resolve.listing(path, conf))
     try {
       floatVec(corpus, idCol, vecCol)
         .select(col("_id").as(idCol), col("_v").as(vecCol))
@@ -910,7 +911,7 @@ object Similarity {
     } catch {
       case e: Throwable =>
         oldSidecarText.foreach { txt =>
-          if (preListing.nonEmpty && Dedup.indexDataListing(path, conf) == preListing)
+          if (preListing.exists(_.unchangedIn(Resolve.listing(path, conf))))
             Dedup.writeSidecarText(vectorSidecarPath(path), txt, conf)
         }
         throw e

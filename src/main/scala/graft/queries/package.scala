@@ -1,5 +1,6 @@
 package graft
 
+import graft.readers.Resolve
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -20,10 +21,13 @@ package object queries {
     *    TIMESTAMP_NTZ, which `unix_millis`/`unix_micros` REJECT — cast
     *    to TIMESTAMP. With the UTC session zone the naive value is the
     *    same instant DuckDB's `epoch_ms(ts)` sees, so oracles agree.
+    *
+    * Loads through [[graft.readers.Resolve.load]], whose schema memo keys
+    * on the session conf, so the nanosAsLong setting is part of the key.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Resolve.load(spark, "parquet", s"$dir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType)         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case Some(TimestampNTZType) => df.withColumn("ts", col("ts").cast(TimestampType))

@@ -31,7 +31,7 @@ trait Reader extends Tokenizable {
   def tokenAttrs: Map[String, Any] = Map("name" -> name)
 }
 
-/** Generic `spark.read.format(fmt)` reader. */
+/** Generic `spark.read.format(fmt)` reader, loading through [[Resolve.load]]. */
 class FormatReader(
     val name: String,
     fmt: String,
@@ -42,7 +42,7 @@ class FormatReader(
   override lazy val importable: Boolean =
     requiredClass.forall(c => scala.util.Try(Class.forName(c)).isSuccess)
   def read(spark: SparkSession, ref: DataRef): DataFrame =
-    spark.read.format(fmt).options(defaults ++ ref.options).load(ref.url)
+    Resolve.load(spark, fmt, ref.url, defaults ++ ref.options)
 }
 
 object SparkReaders {

@@ -149,6 +149,19 @@ class BenchDriftSpec extends AnyFunSuite {
     assert(Bench.parseNamedTimes(txt, "absent_key").isEmpty)
   }
 
+  test("parseNamedTimes anchors on the depth-1 key, not a quoted mention of it") {
+    // a note that quotes the key (followed by another q-named object), a
+    // note that quotes it escaped, and a nested object of the same name
+    // all come before the real object
+    val txt = """{"note":"serial_canaries","see":{"q01_agg":9.9},"why":"see \"serial_canaries\": {\"q03_y\": 7.7}",""" +
+      """"cold":{"serial_canaries":{"q02_x":8.8}},"serial_canaries" : {"q24_topk_per_group":1.1},""" +
+      """"queries":{"q65_freq_items":0.135}}"""
+    assert(Bench.parseNamedTimes(txt, "serial_canaries") == Map("q24_topk_per_group" -> 1.1))
+    assert(Bench.parseQueryTimes(txt) == Map("q65_freq_items" -> 0.135))
+    // the key present only inside a string value: no object
+    assert(Bench.parseNamedTimes("""{"note":"\"serial_canaries\":{\"q01_agg\":9.9}"}""", "serial_canaries").isEmpty)
+  }
+
   test("the committed reference carries a ~1 s serial wall for the second canary") {
     val p = java.nio.file.Paths.get("tools/bench_reference.json")
     assume(java.nio.file.Files.exists(p), "reference not committed yet")

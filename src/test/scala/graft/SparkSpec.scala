@@ -18,4 +18,11 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Date every file under `f` a minute back, past the 2 s racy-mtime
+    * window of [[graft.readers.Resolve.Listing]], like files a session
+    * re-reads or an index written earlier. */
+  def ageFiles(f: java.io.File): Unit =
+    if (f.isDirectory) f.listFiles.foreach(ageFiles)
+    else assert(f.setLastModified(System.currentTimeMillis() - 60000L))
 }

@@ -108,6 +108,9 @@ class R21OptimizationSpec extends SparkSpec {
       val recipe = Dedup.writeSignatureIndex(corpus, "doc_id", "text", path,
         shingleN = 3, k = 8)
       assert(Dedup.readIndexRecipe(path).contains(recipe))
+      // an index written outside the racy-mtime window: only then can a
+      // listing prove the data untouched
+      graft.SparkSpec.ageFiles(new java.io.File(path))
       // an overwrite whose ANALYSIS fails (missing text column) never
       // touches the data files — the old index must come back validated,
       // not bare (the fail-open footgun the sidecar exists to prevent)

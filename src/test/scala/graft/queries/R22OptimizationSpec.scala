@@ -3,6 +3,7 @@ package graft.queries
 import graft.SparkSpec
 import graft.functions.MinHashUnion
 import graft.ops.Dedup
+import graft.readers.Resolve
 import org.apache.spark.sql.functions._
 
 /** Round-22 optimization pins: each test freezes the EQUIVALENCE between
@@ -56,19 +57,20 @@ class R22OptimizationSpec extends SparkSpec {
       touch("_SUCCESS", "")
       touch("_graft_sig_index.json", "{}")
       touch(".hidden.crc", "x")
-      val base = Dedup.indexDataListing(dir.toString, spark.sessionState.newHadoopConf())
-      assert(base.map(_._1) == Seq("part-00000.parquet"),
+      def listing() = Resolve.listing(dir.toString, spark.sessionState.newHadoopConf()).files
+      val base = listing()
+      assert(base.map(f => new org.apache.hadoop.fs.Path(f._1).getName) == Seq("part-00000.parquet"),
         "sidecar/_SUCCESS/hidden files must not count as index data")
       // unchanged directory -> identical fingerprint (the restore fires)
-      assert(Dedup.indexDataListing(dir.toString, spark.sessionState.newHadoopConf()) == base)
+      assert(listing() == base)
       // a NEW part-file (a partially committed overwrite) changes it
       touch("part-00001.parquet", "bbbb")
-      val withNew = Dedup.indexDataListing(dir.toString, spark.sessionState.newHadoopConf())
+      val withNew = listing()
       assert(withNew != base, "a partially committed new part-file must defeat the restore")
       // ...and so does rewriting an existing file's content (length)
       java.nio.file.Files.delete(dir.resolve("part-00001.parquet"))
       touch("part-00000.parquet", "aaaaaaaa")
-      assert(Dedup.indexDataListing(dir.toString, spark.sessionState.newHadoopConf()) != base)
+      assert(listing() != base)
     } finally {
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
@@ -83,6 +85,9 @@ class R22OptimizationSpec extends SparkSpec {
       val recipe = Dedup.writeSignatureIndex(corpus, "doc_id", "text", path,
         shingleN = 3, k = 8)
       assert(Dedup.readIndexRecipe(path).contains(recipe))
+      // an index written outside the racy-mtime window (files written
+      // within it cannot prove themselves untouched; see the next test)
+      SparkSpec.ageFiles(new java.io.File(path))
       // a RUNTIME failure (analysis passes, the job throws mid-write):
       // this local committer stages everything under _temporary and
       // only clears the destination at commit, so the failure leaves
@@ -102,6 +107,41 @@ class R22OptimizationSpec extends SparkSpec {
         "old files provably untouched -> the old recipe must come back")
       assert(spark.read.parquet(path).as[(Long, Seq[Long])].collect().map(_._1).toSeq == Seq(1L),
         "the restored recipe must be validating the OLD data")
+    } finally {
+      def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); () }
+      rm(dir)
+    }
+  }
+
+  test("a same-name, same-length rewrite inside the mtime window does not restore the old recipe") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_racy_sidecar").toFile
+    try {
+      val path = new java.io.File(dir, "idx").getAbsolutePath
+      val corpus = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+      val recipe = Dedup.writeSignatureIndex(corpus, "doc_id", "text", path, shingleN = 3, k = 8)
+      assert(Dedup.readIndexRecipe(path).contains(recipe))
+      val part = new java.io.File(path).listFiles.find(_.getName.startsWith("part-")).get
+      val mtime = part.lastModified
+      def listing() = Resolve.listing(path, spark.sessionState.newHadoopConf()).files
+      val before = listing()
+      // the failing overwrite's task rewrites the old part file in place:
+      // same name and length, and the mtime a 2 s-granularity clock
+      // would give a write in the same tick — then the job fails
+      val rewriteThenFail = udf { (s: String) =>
+        val bytes = java.nio.file.Files.readAllBytes(part.toPath)
+        bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x5a).toByte
+        java.nio.file.Files.write(part.toPath, bytes)
+        part.setLastModified(mtime)
+        if (s != null) throw new RuntimeException("boom after rewrite"); s
+      }
+      val poisoned = Seq((2L, "zeta eta theta iota kappa")).toDF("doc_id", "text")
+        .select(col("doc_id"), rewriteThenFail(col("text")).as("text"))
+      intercept[Throwable] {
+        Dedup.writeSignatureIndex(poisoned, "doc_id", "text", path, shingleN = 3, k = 8)
+      }
+      assert(listing() == before, "the rewrite is invisible to the listing fingerprint")
+      assert(Dedup.readIndexRecipe(path).isEmpty,
+        "a listing taken within the mtime window proves nothing: the index must stay bare")
     } finally {
       def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); () }
       rm(dir)
