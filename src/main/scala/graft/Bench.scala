@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
-import org.apache.spark.sql.SparkSession
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.Try
@@ -113,6 +112,18 @@ object Bench {
   private[graft] def parseQueryTimes(txt: String): Map[String, Double] =
     parseNamedTimes(txt, "queries")
 
+  /** Longest-first (LPT) submission order of `names` by `costs`: the
+    * previous run's per-query walls, or on a first run the committed
+    * reference walls, which double as the scheduling cost. A query
+    * missing from `costs` (added since) is scheduled at the median cost,
+    * not the tail: a new heavy query backloaded behind 50 cheap ones is
+    * the failure LPT exists to avoid. Ties break by name. */
+  private[graft] def lptOrder(names: Seq[String], costs: Map[String, Double]): Seq[String] = {
+    val sorted = costs.values.toSeq.sorted
+    val median = if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
+    names.sortBy(n => (-costs.getOrElse(n, median), n))
+  }
+
   /** Median of three serial walls — the canary regime (r22, VERDICT r21
     * #3): best-of-N hides sustained load (every run inside a loaded
     * window is slow, min just picks the least slow), while the median
@@ -172,7 +183,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 16 concurrent queries over 32 cores measured fastest (vs 8: the
     // pool keeps the core-hungry LSH/CC chains company; vs 32: task
     // thrash) — FAIR scheduling keeps latency-bound chains moving.
@@ -189,20 +199,14 @@ object Bench {
     val benchQueries = SparkEntry.queries -- exclude
     if (exclude.nonEmpty)
       System.err.println(s"[bench] excluding ${(exclude -- unknownExcludes).size} queries: ${(exclude -- unknownExcludes).toSeq.sorted.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR scheduling: the batch mixes long scan/UDF stages with
-      // latency-bound multi-job chains (connected-components rounds,
-      // checkpointed iterations). Under FIFO a 32-task UDF stage blocks
-      // every later-submitted small job — the round-3 profile showed
-      // q76's 7-job chain stretched 5x by head-of-line blocking. FAIR
-      // round-robins tasks across concurrent queries, which is also how
-      // a shared production cluster schedules a query batch.
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
+    // FAIR scheduling: the batch mixes long scan/UDF stages with
+    // latency-bound multi-job chains (connected-components rounds,
+    // checkpointed iterations). Under FIFO a 32-task UDF stage blocks
+    // every later-submitted small job — the round-3 profile showed
+    // q76's 7-job chain stretched 5x by head-of-line blocking. FAIR
+    // round-robins tasks across concurrent queries, which is also how
+    // a shared production cluster schedules a query batch.
+    val spark = Engine.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "spark.scheduler.mode" -> "FAIR")
     spark.sparkContext.setLogLevel("ERROR")
 
     val pool = Executors.newFixedThreadPool(parallelism)
@@ -211,42 +215,18 @@ object Bench {
     // Longest-first submission (LPT): with a fixed-width pool, launching
     // the expensive LSH/text queries first keeps the tail short instead
     // of backloading them behind 50 cheap queries. Costs come from the
-    // previous run's summary file when present (self-tuning — a stale
-    // hand-list silently degrades LPT); the static tier list is only the
-    // first-run fallback. Unknown queries default to mid-tier.
+    // previous run's summary file when present (self-tuning), else from
+    // the committed reference walls (see [[lptOrder]]).
     val summaryPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "target/bench_summary.json"))
-    // Minimal extraction of the "queries" object: "name":secs pairs.
-    // Scans to the BRACE MATCHING the object opener, not the first '}'
-    // — first-'}' only works while "queries" happens to precede
-    // "cold_queries" in the line, a field-order accident.
     val priorTimes: Map[String, Double] = Try {
       parseQueryTimes(new String(Files.readAllBytes(summaryPath), StandardCharsets.UTF_8))
     }.getOrElse(Map.empty)
-    // NON-AUTHORITATIVE first-run fallback ONLY: once a summary file
-    // exists, priorTimes supersedes this list entirely — do not hand-tune
-    // it against new measurements, it is dead weight on every run after
-    // the first and is expected to rot as queries change.
-    val heavy = Seq(
-      "q42_minhash_lsh", "q63_neardup_clusters", "q78_minhash_portable",
-      "q88_duplicate_spans", "q90_dup_span_stats", "q51_lsh_knn", "q41_jaccard_pairs",
-      "q50_embedding_neardup", "q46_lang_quality", "q47_wordcount", "q49_knn_cosine",
-      "q85_source_overlap", "q76_cc_exact", "q77_decontaminate",
-      "q52_quality_filter", "q59_multiset_ops", "q03_segment_top_revenue",
-      "q05_nation_revenue", "q53_stream_tumbling_batch", "q54_stream_session_batch",
-      "q56_group_sketch_union", "q57_salted_join", "q58_ivf_knn", "q87_ivf_knn_portable"
-    )
-    val rank = heavy.zipWithIndex.toMap
-    val ordered =
-      if (priorTimes.nonEmpty) {
-        // a query ADDED since the last run has no measurement — schedule
-        // it at the measured median, not the tail (a new heavy query
-        // backloaded behind 50 cheap ones is the LPT failure mode this
-        // self-tuning exists to avoid)
-        val sortedTimes = priorTimes.values.toSeq.sorted
-        val median = sortedTimes(sortedTimes.size / 2)
-        benchQueries.toSeq.sortBy { case (n, _) => (-priorTimes.getOrElse(n, median), n) }
-      } else
-        benchQueries.toSeq.sortBy { case (n, _) => (rank.getOrElse(n, heavy.size), n) }
+    val referencePath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_REFERENCE", "tools/bench_reference.json"))
+    val referenceTimes: Map[String, Double] = Try {
+      parseQueryTimes(new String(Files.readAllBytes(referencePath), StandardCharsets.UTF_8))
+    }.getOrElse(Map.empty)
+    val ordered = lptOrder(benchQueries.keys.toSeq, if (priorTimes.nonEmpty) priorTimes else referenceTimes)
+      .map(n => n -> benchQueries(n))
 
     def runBatch(): (Map[String, Double], Double) = {
       val t0 = System.nanoTime()
@@ -364,10 +344,6 @@ object Bench {
       warmPasses.map(_._1).reduce((a, b) => (a.keySet ++ b.keySet).map { k =>
         k -> math.min(a.getOrElse(k, Double.MaxValue), b.getOrElse(k, Double.MaxValue))
       }.toMap)
-    val referencePath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_REFERENCE", "tools/bench_reference.json"))
-    val referenceTimes: Map[String, Double] = Try {
-      parseQueryTimes(new String(Files.readAllBytes(referencePath), StandardCharsets.UTF_8))
-    }.getOrElse(Map.empty)
     def driftObj(m: Map[String, Double]): String =
       m.toSeq.sortBy(_._1).map { case (q, r) => "\"" + q + "\":" + f"$r%.2f" }.mkString("{", ",", "}")
     // A query that THROWS on a serial re-run is the worst kind of drift —

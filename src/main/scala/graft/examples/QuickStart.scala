@@ -1,11 +1,11 @@
 package graft.examples
 
+import graft.Engine
 import graft.catalog.{Catalog, CatalogIO, SimpleUserParameter, TextExpr}
 import graft.datatypes.DataRef
 import graft.inspect.Inspect
 import graft.ops.{Dedup, Relational, Similarity, TextOps}
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end tour of the public API — what a user of the reference
@@ -15,13 +15,7 @@ import org.apache.spark.sql.functions._
 object QuickStart {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-quickstart")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(4, "spark.app.name" -> "graft-quickstart")
     spark.sparkContext.setLogLevel("WARN")
 
     // 1. URL → data, no format given: detect + pick reader + lazy pipeline

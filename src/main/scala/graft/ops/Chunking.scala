@@ -28,10 +28,10 @@ object Chunking {
     * n_tokens - chunk_index*step)` — not a re-tokenization of
     * `chunk_text`: tokens are non-empty and whitespace-free, so
     * re-splitting the single-space join returns exactly the slice,
-    * making the two value-identical by construction (pinned by the
-    * tools/ProfQ69 parity pass and the q69 DuckDB oracle) while
-    * skipping a per-chunk regex pass at materialization time (~12% of
-    * the full-evaluation wall in the r20 A/B).
+    * making the two value-identical by construction (pinned by the q69
+    * DuckDB oracle) while skipping a per-chunk regex pass at
+    * materialization time (~12% of the full-evaluation wall in the r20
+    * A/B).
     */
   def chunkByTokens(
       df: DataFrame,

@@ -73,7 +73,7 @@ object Dedup {
     * fused [[graft.functions.SpanGrams]] codegen expression — the HOF
     * formulation (`transform` + `slice` + `concat_ws` per gram) runs
     * interpreted and paid a lambda dispatch plus a slice allocation per
-    * gram (A/B in tools/ProfQ88.scala).
+    * gram (TextExpressionsSpec pins the two equal).
     */
   def shingles(text: Column, n: Int): Column =
     graft.functions.TextFunctions.spanGrams(TextOps.tokens(text), n)
@@ -270,10 +270,9 @@ object Dedup {
     * query). Since round 18 this is the fused
     * [[graft.functions.GramHashes]] codegen expression — bit-for-bit
     * the values of the previous interpreted HOF tree (pinned by
-    * DedupSpec), with zero per-gram allocations (A/B in
-    * tools/ProfQ88.scala). Distinctness matches [[shingles]] modulo
-    * 64-bit collisions — the same ~G²/2⁶⁴ argument the hashed join keys
-    * already carry. Texts shorter than n tokens contribute one
+    * DedupSpec), with zero per-gram allocations. Distinctness matches
+    * [[shingles]] modulo 64-bit collisions — the same ~G²/2⁶⁴ argument
+    * the hashed join keys already carry. Texts shorter than n tokens contribute one
     * whole-sequence gram, same convention as [[shingles]].
     */
   def gramHashes(text: Column, n: Int): Column =
@@ -326,9 +325,8 @@ object Dedup {
     * round 19). The round-18 staged shape (flat interpreted
     * `transform(toks, xxhash64)` + JIT'd Scala UDF) still paid an
     * interpreted ArrayTransform dispatch per TOKEN plus the UDF's
-    * Seq[Long] boxing bridge per row; both are gone (A/B in
-    * tools/ProfQ42.scala, bit parity pinned in MinHashSigSpec against
-    * [[stagedMinhashSignature]]). `repartitionTo` spreads a
+    * Seq[Long] boxing bridge per row; both are gone (bit parity pinned
+    * in MinHashSigSpec against [[stagedMinhashSignature]]). `repartitionTo` spreads a
     * single-file scan across cores before the compute-heavy stage (a
     * 100 TB input already has thousands of partitions; a local
     * single-parquet-file scan has one).

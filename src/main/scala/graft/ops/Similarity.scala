@@ -454,7 +454,7 @@ object Similarity {
     * and run ONE parallelized map stage whose hand-fused pair loop
     * replaces BroadcastNestedLoopJoin's per-pair interpreted condition
     * (the NLJ spends ~10x the dot product's cost on expression dispatch
-    * at this shape — A/B in tools/ProfQ50.scala). Nulls drop as the Column plan
+    * at this shape). Nulls drop as the Column plan
     * would (null id/vec never satisfies `<` or `>=`); cosine uses
     * [[graft.functions.VectorFunctions.cosineSim]]'s zero-norm = 0.0
     * convention, and the threshold compare uses java.lang.Double

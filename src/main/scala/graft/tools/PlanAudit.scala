@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Engine, SparkEntry}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan audit over the whole query inventory: for each query,
   * record shuffle (Exchange) count, broadcast joins, whether parquet scans
@@ -18,12 +17,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

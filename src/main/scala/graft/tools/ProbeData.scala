@@ -3,10 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared scale-probe corpus derivation (ScaleProbe 10x, DeepScaleProbe
-  * 10x/100x) — ONE implementation so the two tools can never measure
-  * different corpora (the round-17 sign-pattern clone bug was fixed in
-  * one place; a verbatim copy re-created the divergence risk).
+/** Scale-probe corpus derivation for [[DeepScaleProbe]]'s 10x/100x/1000x
+  * slices.
   *
   * Documents: `replicas` copies, every token replica-prefixed so
   * replicas share NO shingles — within-replica dup/similarity structure

@@ -1,37 +1,46 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Engine, SparkEntry}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Run a single named query with timing and optional plan dump:
-  * `sbt "runMain graft.tools.RunOne q42_minhash_lsh /root/testdata/sf0.1 [explain] [repeat=N]"`.
+/** Time named queries, interleaved, with an optional plan dump — the
+  * A/B harness for two shapes of one query or any handful of queries:
+  * `sbt "runMain graft.tools.RunOne q42_minhash_lsh[,q63_neardup_clusters] /root/testdata/sf0.1 [explain] [repeat=N]"`.
+  *
+  * Each query runs one warm-up, then the queries alternate a,b,a,b for
+  * N rounds in one session: sequential blocks bias whichever query runs
+  * later (warmer JIT and codegen cache). Every run prints its
+  * build / plan / exec split. Exec collects the DataFrame whose plan
+  * was just timed (`count()` would plan and run a different, pruned
+  * query), so `explain`, printed after each warm-up, shows the adaptive
+  * plan that actually ran.
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").map(_.trim).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val explain = args.contains("explain")
     val repeat = args.collectFirst { case s if s.startsWith("repeat=") => s.drop(7).toInt }.getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val fns = names.map(n => n -> SparkEntry.queries(n)).toMap
+    val spark = Engine.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(name)
-    (1 to repeat).foreach { i =>
+    def run(name: String, label: String): DataFrame = {
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
+      val df = fns(name)(spark, sfDir)
       val tBuild = System.nanoTime()
       df.queryExecution.executedPlan // force analysis + optimization + physical planning
       val tPlan = System.nanoTime()
-      if (explain && i == 1) df.explain("formatted")
-      val n = df.count()
+      val n = df.collect().length
       val tEnd = System.nanoTime()
-      println(f"[$name] run $i: total=${(tEnd - t0) / 1e9}%.2fs build=${(tBuild - t0) / 1e9}%.2fs plan=${(tPlan - tBuild) / 1e9}%.2fs exec=${(tEnd - tPlan) / 1e9}%.2fs rows=$n")
+      println(f"[$name] $label: total=${(tEnd - t0) / 1e9}%.2fs build=${(tBuild - t0) / 1e9}%.2fs plan=${(tPlan - tBuild) / 1e9}%.2fs exec=${(tEnd - tPlan) / 1e9}%.2fs rows=$n")
+      df
     }
+    names.foreach { name =>
+      val df = run(name, "warm-up")
+      if (explain) println(df.queryExecution.explainString(FormattedMode))
+    }
+    (1 to repeat).foreach(i => names.foreach(run(_, s"run $i")))
     spark.stop()
   }
 }

@@ -181,4 +181,17 @@ class BenchDriftSpec extends AnyFunSuite {
       s"reference stale: ${ref.size} entries, missing ${missing.toSeq.sorted.take(10)}")
     assert(ref.values.forall(v => v > 0 && v < 120))
   }
+
+  test("a first run orders longest-first by the committed reference, unknown queries at the median") {
+    val costs = Map("q_a" -> 4.0, "q_b" -> 1.0, "q_c" -> 2.0)
+    assert(Bench.lptOrder(Seq("q_b", "q_new", "q_a", "q_c"), costs) == Seq("q_a", "q_c", "q_new", "q_b"))
+    assert(Bench.lptOrder(Seq("q_b", "q_a"), Map.empty) == Seq("q_a", "q_b"))
+    val p = java.nio.file.Paths.get("tools/bench_reference.json")
+    assume(java.nio.file.Files.exists(p), "reference not committed yet")
+    val ref = Bench.parseQueryTimes(java.nio.file.Files.readString(p))
+    val order = Bench.lptOrder(SparkEntry.queries.keys.toSeq, ref).filter(ref.contains)
+    assert(order.map(ref).sliding(2).forall { case Seq(a, b) => a >= b })
+    // the long poles added after the hand-kept tier list go to the front
+    assert(order.indexOf("q94_incremental_dedup") < order.size / 4)
+  }
 }

@@ -10,14 +10,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Engine.session(4, "spark.app.name" -> "graft-test")
 
   /** Date every file under `f` a minute back, past the 2 s racy-mtime
     * window of [[graft.readers.Resolve.Listing]], like files a session

@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Parity pins for the round-19 fused [[MinHashSig]] expression: it
   * must reproduce the round-18 staged pipeline
   * ([[Dedup.stagedMinhashSignature]]: interpreted transform+xxhash64 →
-  * JIT'd UDF) bit-for-bit — the fusion is a pure performance move (A/B
-  * in tools/ProfQ42.scala) and any value drift would silently re-band
-  * every LSH bucket in q42/q63 and the near-dup scale probes.
+  * JIT'd UDF) bit-for-bit — the fusion is a pure performance move and
+  * any value drift would silently re-band every LSH bucket in q42/q63
+  * and the near-dup scale probes.
   */
 class MinHashSigSpec extends SparkSpec {
   import spark.implicits._

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Parity pins for the round-18 fused text expressions: SpanGrams and
   * GramHashes must reproduce their interpreted-HOF predecessors
-  * bit-for-bit — the fusion is a pure performance move (A/B in
-  * tools/ProfQ88.scala) and any value drift would silently re-key every
-  * span/gram aggregation (q85/q88/q90).
+  * bit-for-bit — the fusion is a pure performance move and any value
+  * drift would silently re-key every span/gram aggregation
+  * (q85/q88/q90).
   */
 class TextExpressionsSpec extends SparkSpec {
   import spark.implicits._

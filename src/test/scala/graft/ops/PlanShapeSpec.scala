@@ -225,7 +225,7 @@ class PlanShapeSpec extends SparkSpec {
     val df = Seq.tabulate(40)(i => (i.toLong, Array.fill(8)(i.toFloat + 1))).toDF("id", "vec")
     val plan = physical(Similarity.cosineNearDupPairs(df, "id", "vec", 0.9, dim = 8))
     // the hand-fused pair loop replaced BNLJ's per-pair interpreted
-    // condition (~10x the dot product's cost — tools/ProfQ50.scala)
+    // condition (~10x the dot product's cost)
     assert(!plan.contains("NestedLoop"), s"brute path must not plan a nested-loop join:\n$plan")
     assert(plan.contains("Scan ExistingRDD"), s"brute path runs from the bounded probe:\n$plan")
   }
