@@ -14,9 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  1. `metadata/` — highest-version `*.metadata.json` (honouring
   *     `version-hint.text` when present) → current snapshot;
-  *  2. the snapshot's manifest list (Avro, read through Spark's bundled
-  *     avro source) → manifest file paths;
-  *  3. each manifest (Avro) → live data-file entries (`status != 2`);
+  *  2. the snapshot's manifest list (Avro, parsed on the driver by
+  *     [[IcebergManifestCodec]] — no Spark job) → manifest file paths;
+  *  3. each manifest (Avro, same codec) → live data-file entries
+  *     (`status != 2`);
   *  4. `spark.read.parquet(files…)` over the surviving data files —
   *     Iceberg data files carry all columns including identity
   *     partition values, so the parquet scan is the full table. Columns
@@ -60,8 +61,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * registry, so the native path is the fallback, not a replacement.
   *
   * Scale shape: the driver touches only metadata JSON (KBs) and the
-  * manifest Avro files (read as one small Spark job, collected — they
-  * list file paths, not rows); the data scan is a plain distributed
+  * manifest Avro files (parsed driver-locally and cached — they list
+  * file paths, not rows); the data scan is a plain distributed
   * parquet read with pushdown/pruning intact. Driver state is O(live
   * manifest entries) (~200 B each, ~200 MB at 1M files) and EXPLICITLY
   * capped at [[DefaultMaxManifestEntries]] (default 4M ≈ 1 GB peak):
@@ -70,7 +71,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * count comes from the manifest-list's own added/existing/deleted
   * file-count columns when every row carries them (the normal case —
   * no second pass over the manifest Avro just to count); only
-  * count-less lists (early v1, inline manifests) pay a counting read.
+  * count-less lists (early v1, inline manifests) pay a pass over the
+  * manifests' block headers.
   */
 object IcebergReader {
 
@@ -80,18 +82,7 @@ object IcebergReader {
     * value, and concurrent reads can't race each other's caps. */
   val DefaultMaxManifestEntries: Long = 4_000_000L
 
-  /** One manifest entry as parsed from the Avro — the file's OWN fields
-    * only. Sequence inheritance and spec ids are properties of the
-    * manifest-list REFERENCE, attached after retrieval. */
-  private case class ManifestRow(status: Int, filePath: String, fileFormat: String,
-      content: Int, seqOpt: Option[Long], equalityIds: Seq[Int], partitionJson: String,
-      lowerJson: String, upperJson: String,
-      // v3 deletion-vector reference fields (null on v1/v2 manifests)
-      refDataFile: Option[String] = None, contentOffset: Option[Long] = None,
-      contentSize: Option[Long] = None, recordCount: Option[Long] = None,
-      // data_file.file_size_in_bytes — the streaming source's byte-budget
-      // admission reads it off cache hits without re-opening the Avro
-      fileSize: Option[Long] = None)
+  import IcebergManifestCodec.{ManifestListRow, ManifestRow}
 
   // Manifest cache (repeated queries over a deferred view must not
   // re-read manifest Avro per plan): Iceberg manifest files are
@@ -118,14 +109,11 @@ object IcebergReader {
       }
     }
 
-  /** One manifest-list row (reference to a manifest + its list-scoped
-    * metadata). Manifest LIST files are immutable too — one per
-    * snapshot — so their parse caches by path with no invalidation,
-    * removing the last per-query Spark job at plan time for repeated
-    * queries of an unchanged snapshot (metadata.json stays re-read:
-    * it IS the live-snapshot probe). */
-  private case class ManifestListRow(path: String, seq: Long, isDelete: Boolean,
-      specId: Int, partitionsJson: String, entryCount: Option[Long])
+  // Manifest LIST files are immutable too — one per snapshot — so
+  // their parse caches by path with no invalidation, removing the last
+  // per-query metadata read at plan time for repeated queries of an
+  // unchanged snapshot (metadata.json stays re-read: it IS the
+  // live-snapshot probe).
   private val ManifestListCacheMaxRows: Long = 1_000_000L
   private val manifestListCache =
     new java.util.LinkedHashMap[String, Seq[ManifestListRow]](16, 0.75f, true)
@@ -146,45 +134,40 @@ object IcebergReader {
 
   private val AvroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
 
+  /** The session's zone: timestamps in parsed partition JSON render in
+    * it, as Spark's `to_json` renders them. */
+  private def zoneOf(spark: SparkSession): java.time.ZoneId =
+    java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+
   /** Parse one manifest-list Avro (cached by path — one per snapshot,
     * immutable). Shared by the scan walk and the changes walk so the
     * v1/v2 column-name variance is handled in exactly one place. */
   private def manifestListRows(spark: SparkSession, mlPath: String,
       table: String): Seq[ManifestListRow] =
     manifestListCacheGet(mlPath).getOrElse {
-      val mlDf = spark.read.format(AvroFmt).load(mlPath)
-      val mlCols = mlDf.columns.toSet
-      // entry count = added + existing + deleted (status-2 entries are
-      // still rows in the Avro); the v1 Avro names carry a data_ infix
-      def cntCol(v2: String, v1: String): String =
-        if (mlCols.contains(v2)) v2
-        else if (mlCols.contains(v1)) v1
-        else "cast(null as int)"
-      val parsed = mlDf.selectExpr("manifest_path",
-        if (mlCols.contains("sequence_number")) "sequence_number" else "cast(null as bigint) as sequence_number",
-        if (mlCols.contains("content")) "content" else "0 as content",
-        if (mlCols.contains("partition_spec_id")) "partition_spec_id" else "cast(0 as int) as partition_spec_id",
-        if (mlCols.contains("partitions")) "to_json(partitions) as partitions_json"
-        else "cast(null as string) as partitions_json",
-        s"cast(${cntCol("added_files_count", "added_data_files_count")} as bigint) + " +
-          s"cast(${cntCol("existing_files_count", "existing_data_files_count")} as bigint) + " +
-          s"cast(${cntCol("deleted_files_count", "deleted_data_files_count")} as bigint) as entry_count")
-        .collect()
-        .map(r => ManifestListRow(resolve(r.getString(0), table),
-          Option(r.getAs[Number](1)).map(_.longValue()).getOrElse(0L),
-          Option(r.getAs[Number](2)).exists(_.intValue() == 1),
-          Option(r.getAs[Number](3)).map(_.intValue()).getOrElse(0),
-          r.getString(4),
-          Option(r.getAs[Number](5)).map(_.longValue()))).toSeq
+      val parsed = IcebergManifestCodec.readManifestList(mlPath,
+        spark.sparkContext.hadoopConfiguration, zoneOf(spark))
+        .map(r => r.copy(path = resolve(r.path, table)))
       manifestListCachePut(mlPath, parsed)
       parsed
     }
 
+  /** Every entry of one manifest (all statuses), served from
+    * [[manifestCache]] or parsed and cached — the one manifest parse
+    * path of the scan walk, the changes walk and the writer. */
+  private def manifestRows(spark: SparkSession, tableFs: FileSystem,
+      path: String): Seq[ManifestRow] = {
+    val k = PathKeys.driverKey(path, tableFs)
+    manifestCacheGet(k).getOrElse {
+      val rows = IcebergManifestCodec.readManifest(path,
+        spark.sparkContext.hadoopConfiguration, zoneOf(spark))
+      manifestCachePut(k, rows)
+      rows
+    }
+  }
+
   /** Live DATA file paths (raw manifest `file_path` strings) at one
-    * snapshot — the changes walk's set-difference primitive. Reads
-    * manifest-cache HITS as full rows; misses parse only
-    * (status, path, content) and deliberately do NOT populate the
-    * cache (a partial row would poison the scan walk's full parse). */
+    * snapshot — the changes walk's set-difference primitive. */
   private def liveDataPaths(spark: SparkSession, table: String,
       tableFs: FileSystem, snap: JsonNode, maxManifestEntries: Long): Set[String] =
     liveDataFiles(spark, table, tableFs, snap, maxManifestEntries).keySet
@@ -192,8 +175,7 @@ object IcebergReader {
   /** Live DATA files with their `file_size_in_bytes` at one snapshot —
     * the changes walk's set-difference primitive plus the streaming
     * source's byte-budget admission input. Size 0 stands in where the
-    * manifest omits the field (pre-cache-era rows cannot occur: the
-    * cache is per-JVM and always carries fileSize). */
+    * manifest omits the field. */
   private def liveDataFiles(spark: SparkSession, table: String,
       tableFs: FileSystem, snap: JsonNode, maxManifestEntries: Long): Map[String, Long] = {
     val ml = Option(snap.get("manifest-list")).getOrElse(throw new IllegalArgumentException(
@@ -208,24 +190,9 @@ object IcebergReader {
     val out = Map.newBuilder[String, Long]
     var n = 0L
     dataRefs.foreach { m =>
-      val k = PathKeys.driverKey(m.path, tableFs)
-      val paths: Seq[(String, Long)] = manifestCacheGet(k) match {
-        case Some(cached) =>
-          cached.filter(r => r.status != 2 && r.content == 0)
-            .map(r => r.filePath -> r.fileSize.getOrElse(0L))
-        case None =>
-          val df = spark.read.format(AvroFmt).load(m.path)
-          val dfCols = df.select("data_file.*").columns.toSet
-          df.selectExpr("status", "data_file.file_path as p",
-              if (dfCols.contains("content")) "data_file.content as c" else "0 as c",
-              if (dfCols.contains("file_size_in_bytes")) "data_file.file_size_in_bytes as sz"
-              else "cast(null as bigint) as sz")
-            .collect().toSeq
-            .filter(r => r.getAs[Number]("status").intValue() != 2 &&
-              Option(r.getAs[Number]("c")).forall(_.intValue() == 0))
-            .map(r => r.getAs[String]("p") ->
-              Option(r.getAs[Number]("sz")).map(_.longValue()).getOrElse(0L))
-      }
+      val paths = manifestRows(spark, tableFs, m.path)
+        .filter(r => r.status != 2 && r.content == 0)
+        .map(r => r.filePath -> r.fileSize.getOrElse(0L))
       n += paths.length
       require(n <= maxManifestEntries,
         s"iceberg: more than $maxManifestEntries manifest entries — beyond this " +
@@ -254,6 +221,11 @@ object IcebergReader {
   private[readers] def liveDataFilesOf(spark: SparkSession, table: String,
       tableFs: FileSystem, snap: JsonNode): Map[String, Long] =
     liveDataFiles(spark, table, tableFs, snap, DefaultMaxManifestEntries)
+  /** Every entry of the manifest at `path` (all statuses) — the
+    * writer's live-set, expire and orphan walks. */
+  private[readers] def manifestEntriesOf(spark: SparkSession, table: String,
+      path: String): Seq[ManifestRow] =
+    manifestRows(spark, fs(table, spark.sparkContext.hadoopConfiguration), path)
   /** (path, sequenceNumber, specId, isDelete) per manifest-list row —
     * the writer's retained-manifest walk. */
   private[readers] def manifestListRowsOf(spark: SparkSession, mlPath: String,
@@ -1053,7 +1025,6 @@ object IcebergReader {
     def decodeBound(node: JsonNode, icebergType: String): Option[Any] =
       FileSkipping.decodeIcebergBound(node, icebergType)
 
-    val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
     val tableFs = fs(table, conf)
     // v2 (and most v1) snapshots point at a manifest list; early v1 may
     // inline the manifest paths directly. Each list row keeps its own
@@ -1061,16 +1032,11 @@ object IcebergReader {
     // — spec "Sequence Number Inheritance") and its content flag
     // (0 = data manifest, 1 = delete manifest), plus the partition spec
     // id and per-field partition summaries used for manifest skipping.
-    case class ManifestRef(path: String, seq: Long, isDelete: Boolean,
-        specId: Int, partitionsJson: String, entryCount: Option[Long])
-    val manifestList: Seq[ManifestRef] = Option(snap.get("manifest-list")) match {
-      case Some(ml) =>
-        val rows = manifestListRows(spark, resolve(ml.asText(), table), table)
-        rows.map(r =>
-          ManifestRef(r.path, r.seq, r.isDelete, r.specId, r.partitionsJson, r.entryCount))
+    val manifestList: Seq[ManifestListRow] = Option(snap.get("manifest-list")) match {
+      case Some(ml) => manifestListRows(spark, resolve(ml.asText(), table), table)
       case None =>
         Option(snap.get("manifests")).toSeq.flatMap(_.elements().asScala).map(_.asText())
-          .map(p => ManifestRef(resolve(p, table), 0L, isDelete = false, 0, null, None))
+          .map(p => ManifestListRow(resolve(p, table), 0L, isDelete = false, 0, null, None))
     }
     require(manifestList.nonEmpty, s"iceberg: snapshot $currentId lists no manifests")
 
@@ -1079,11 +1045,9 @@ object IcebergReader {
         lowerJson: String, upperJson: String, specId: Int,
         refDataFile: Option[String] = None, contentOffset: Option[Long] = None,
         contentSize: Option[Long] = None, recordCount: Option[Long] = None)
-    // Data and delete manifests load SEPARATELY: a v1→v2-upgraded table
-    // keeps old v1 data manifests (no entry seq, no data_file.content)
-    // next to v2 delete manifests, and one Avro read would infer a
-    // single schema from whichever file it sampled — misclassifying
-    // delete files as data rows or vice versa.
+    // Each manifest parses under its OWN Avro schema: a v1→v2-upgraded
+    // table keeps old v1 data manifests (no entry seq, no
+    // data_file.content) next to v2 delete manifests.
     //
     // Parsed rows are served from [[manifestCache]] when a prior query
     // already read the manifest — manifest Avro files are immutable, so
@@ -1091,7 +1055,7 @@ object IcebergReader {
     // cached and fresh manifest paths. Sequence-number inheritance and
     // spec ids attach AFTER retrieval from the CURRENT manifest list
     // (they are properties of the reference, not the file).
-    def loadEntries(refs: Seq[ManifestRef]): Seq[Entry] = {
+    def loadEntries(refs: Seq[ManifestListRow]): Seq[Entry] = {
       if (refs.isEmpty) return Nil
       val distinctRefs = refs.distinctBy(_.path)
       val keyed = distinctRefs.map(m => m -> PathKeys.driverKey(m.path, tableFs))
@@ -1106,79 +1070,21 @@ object IcebergReader {
           s"iceberg: ${hits.valuesIterator.map(_.length.toLong).sum} manifest entries exceed " +
             s"$maxManifestEntries — beyond this native reader's driver-state bound; " +
             "read it with the iceberg-spark connector jar on the classpath")
-      // count before collect: bounds driver memory BEFORE materializing.
+      // count before parsing: bounds driver memory BEFORE materializing.
       // The manifest-list's own file counts supply it for free; only a
-      // count-less list pays a second pass over the manifest Avro.
+      // count-less list pays a pass over the manifests' block headers.
       val fresh: Map[String, Seq[ManifestRow]] =
         if (missRefs.isEmpty) Map.empty
         else {
-          val manifests = spark.read.format(avroFmt).load(missRefs.map(_._1.path): _*)
           val nMiss =
             if (missRefs.forall(_._1.entryCount.isDefined)) missRefs.flatMap(_._1.entryCount).sum
-            else manifests.count()
+            else missRefs.map(m => IcebergManifestCodec.countEntries(m._1.path, conf)).sum
           val n = hits.valuesIterator.map(_.length.toLong).sum + nMiss
           require(n <= maxManifestEntries,
             s"iceberg: $n manifest entries exceed $maxManifestEntries — beyond this native reader's " +
               "driver-state bound; read it with the iceberg-spark connector jar on the classpath")
-          val entryCols = manifests.columns.toSet
-          val dfCols = manifests.select("data_file.*").columns.toSet
-          val rows = manifests
-            .selectExpr("status", "data_file.file_path as file_path",
-              "lower(data_file.file_format) as file_format",
-              if (dfCols.contains("content")) "data_file.content as content" else "0 as content",
-              if (entryCols.contains("sequence_number")) "sequence_number" else "cast(null as bigint) as sequence_number",
-              if (dfCols.contains("equality_ids")) "data_file.equality_ids as equality_ids" else "null as equality_ids",
-              if (dfCols.contains("partition")) "to_json(data_file.partition) as partition_json"
-              else "cast(null as string) as partition_json",
-              // per-file column bounds (map field-id → single-value-serialized
-              // binary); JSON carries them as {id: base64}
-              if (dfCols.contains("lower_bounds")) "to_json(data_file.lower_bounds) as lower_json"
-              else "cast(null as string) as lower_json",
-              if (dfCols.contains("upper_bounds")) "to_json(data_file.upper_bounds) as upper_json"
-              else "cast(null as string) as upper_json",
-              // v3 deletion-vector reference (puffin blob address)
-              if (dfCols.contains("referenced_data_file")) "data_file.referenced_data_file as ref_data_file"
-              else "cast(null as string) as ref_data_file",
-              if (dfCols.contains("content_offset")) "data_file.content_offset as content_offset"
-              else "cast(null as bigint) as content_offset",
-              if (dfCols.contains("content_size_in_bytes")) "data_file.content_size_in_bytes as content_size"
-              else "cast(null as bigint) as content_size",
-              if (dfCols.contains("record_count")) "data_file.record_count as record_count"
-              else "cast(null as bigint) as record_count",
-              if (dfCols.contains("file_size_in_bytes")) "data_file.file_size_in_bytes as file_size"
-              else "cast(null as bigint) as file_size",
-              "_metadata.file_path as __manifest")
-            .collect().toSeq.map { r =>
-              // the manifest key arrives ALREADY encoded from _metadata —
-              // strip only, re-encoding would double-quote %
-              PathKeys.scanKeyStr(r.getAs[String]("__manifest")) -> ManifestRow(
-                r.getAs[Int]("status"),
-                r.getAs[String]("file_path"),
-                r.getAs[String]("file_format"),
-                Option(r.getAs[Number]("content")).map(_.intValue()).getOrElse(0),
-                Option(r.getAs[Number]("sequence_number")).map(_.longValue()),
-                Option(r.getAs[scala.collection.Seq[Any]]("equality_ids"))
-                  .map(_.map(_.asInstanceOf[Number].intValue()).toSeq).getOrElse(Nil),
-                r.getAs[String]("partition_json"),
-                r.getAs[String]("lower_json"), r.getAs[String]("upper_json"),
-                Option(r.getAs[String]("ref_data_file")),
-                Option(r.getAs[Number]("content_offset")).map(_.longValue()),
-                Option(r.getAs[Number]("content_size")).map(_.longValue()),
-                Option(r.getAs[Number]("record_count")).map(_.longValue()),
-                Option(r.getAs[Number]("file_size")).map(_.longValue()))
-            }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-          // every collected row must key back to a requested manifest —
-          // a key-form mismatch (driverKey vs _metadata's scanKey) would
-          // otherwise cache Nil for the manifest and SILENTLY drop its
-          // entries (under-read / under-delete); refuse loudly instead
-          val missKeys = missRefs.map(_._2).toSet
-          val orphans = rows.keySet.diff(missKeys)
-          require(orphans.isEmpty,
-            s"iceberg: manifest keys ${orphans.mkString(", ")} not in the requested set — path keying bug")
-          // a zero-entry manifest must cache too, or it re-reads forever
-          val byKey = missRefs.map { case (_, k) => k -> rows.getOrElse(k, Nil) }.toMap
-          byKey.foreach { case (k, rs) => manifestCachePut(k, rs) }
-          byKey
+          // a zero-entry manifest caches too, or it re-reads forever
+          missRefs.map { case (m, k) => k -> manifestRows(spark, tableFs, m.path) }.toMap
         }
       distinctRefs.flatMap { m =>
         val k = PathKeys.driverKey(m.path, tableFs)
@@ -1208,7 +1114,7 @@ object IcebergReader {
     // filter can only remove rows the residual filter drops anyway.
     // Fail open on anything unexpected (missing summaries, unknown
     // types).
-    def manifestExcluded(m: ManifestRef): Boolean =
+    def manifestExcluded(m: ManifestListRow): Boolean =
       filterConjs.nonEmpty && m.partitionsJson != null && scala.util.Try {
         val fields = specsById.getOrElse(m.specId, Nil)
         val summaries = new ObjectMapper().readTree(m.partitionsJson)

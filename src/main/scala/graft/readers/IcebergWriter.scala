@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import java.net.URI
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Native Iceberg WRITER — the Delta writer's format twin, with a
@@ -51,7 +51,6 @@ object IcebergWriter {
 
   private val mapper = new ObjectMapper()
   private def js(s: String): String = mapper.writeValueAsString(s)
-  private val AvroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
 
   /** Path string for the metadata/manifests: local `file:` URIs render
     * single-slash (`file:/tmp/…`), which the reader's resolve treats
@@ -888,53 +887,55 @@ object IcebergWriter {
       lower: Map[String, Array[Byte]] = Map.empty,
       upper: Map[String, Array[Byte]] = Map.empty)
 
-  /** One manifest Avro under `metadata/m-<uuid>`: typed rows (the
+  /** One manifest Avro at `metadata/<uuid>-m0.avro`, written
+    * driver-locally by [[IcebergManifestCodec]]: typed rows (the
     * partition struct carries real logical types, so the reader's
-    * per-file pruning casts exactly; per-column bounds ride as
-    * id-keyed maps the reader's stats pruning range-tests). Returns
-    * (storedPath, length, per-field summaries for the manifest list). */
+    * per-file pruning casts exactly; per-column bounds ride as id-keyed
+    * maps the reader's stats pruning range-tests). Returns (storedPath,
+    * length, per-field summaries for the manifest list). */
   private def writeManifest(spark: SparkSession, f: FileSystem, table: String,
       snapshotId: Long, rows: Seq[ManifestEntry],
       partFields: Seq[StructField],
       content: Int = 0): (String, Long, Seq[FieldSummary]) = {
-    val dir = s"${table.stripSuffix("/")}/metadata/m-${java.util.UUID.randomUUID()}"
-    val rowSchema = StructType(
-      Seq(StructField("p", StringType), StructField("sz", LongType),
-        StructField("rc", LongType),
-        StructField("lb", MapType(StringType, BinaryType)),
-        StructField("ub", MapType(StringType, BinaryType))) ++
-      partFields.map(pf => StructField(s"_pv_${pf.name}", pf.dataType)))
-    val sparkRows = rows.map { e =>
-      org.apache.spark.sql.Row.fromSeq(
-        Seq[Any](e.path, e.size, e.records, e.lower, e.upper) ++ e.tuple)
+    val path = new Path(s"${table.stripSuffix("/")}/metadata/${java.util.UUID.randomUUID()}-m0.avro")
+    val bounds = MapType(StringType, BinaryType)
+    val dataFile = StructType(Seq(
+      StructField("file_path", StringType),
+      StructField("file_format", StringType, nullable = false),
+      StructField("content", IntegerType, nullable = false),
+      StructField("record_count", LongType), StructField("file_size_in_bytes", LongType),
+      StructField("lower_bounds", bounds), StructField("upper_bounds", bounds)) ++
+      (if (partFields.isEmpty) Nil
+       else Seq(StructField("partition",
+         StructType(partFields.map(pf => StructField(pf.name, pf.dataType))), nullable = false))))
+    val schema = StructType(Seq(
+      StructField("status", IntegerType, nullable = false),
+      StructField("snapshot_id", LongType, nullable = false),
+      StructField("sequence_number", LongType),
+      StructField("data_file", dataFile, nullable = false)))
+    val avroRows = rows.map { e =>
+      Row(1, snapshotId, null, Row.fromSeq(
+        Seq[Any](e.path, "PARQUET", content, e.records, e.size, e.lower, e.upper) ++
+          (if (partFields.isEmpty) Nil else Seq(Row.fromSeq(e.tuple)))))
     }
-    val partExpr =
-      if (partFields.isEmpty) ""
-      else ", 'partition', named_struct(" +
-        partFields.map(pf => s"'${pf.name}', `_pv_${pf.name}`").mkString(", ") + ")"
-    spark.createDataFrame(spark.sparkContext.parallelize(sparkRows, 1), rowSchema)
-      .selectExpr("1 as status",
-        s"cast($snapshotId as bigint) as snapshot_id",
-        "cast(null as bigint) as sequence_number",
-        s"""named_struct('file_path', p, 'file_format', 'PARQUET', 'content', $content,
-          |'record_count', rc, 'file_size_in_bytes', sz,
-          |'lower_bounds', lb, 'upper_bounds', ub$partExpr) as data_file""".stripMargin)
-      .coalesce(1).write.format(AvroFmt).save(dir)
-    val part = f.listStatus(new Path(dir)).find(_.getPath.getName.endsWith(".avro")).get
-    (storedPath(part.getPath), part.getLen, summarize(rows, partFields))
+    val len = IcebergManifestCodec.write(path, spark.sparkContext.hadoopConfiguration,
+      schema, avroRows)
+    (storedPath(f.makeQualified(path)), len, summarize(rows, partFields))
   }
 
-  /** The snapshot's manifest-list Avro under `metadata/snap-<id>-<uuid>`;
-    * `manifests` rows are (path, length, sequenceNumber, specId,
-    * isDelete, field summaries) — retained manifests keep their
-    * ORIGINAL sequence numbers and summaries. The `partitions`
-    * summaries let the reader skip whole manifests unread, so a long
-    * append history filters without touching most of its manifest
-    * Avros. Returns the stored path. */
+  /** The snapshot's manifest-list Avro at
+    * `metadata/snap-<id>-<uuid>.avro`, written driver-locally by
+    * [[IcebergManifestCodec]]; `manifests` rows are (path, length,
+    * sequenceNumber, specId, isDelete, field summaries) — retained
+    * manifests keep their ORIGINAL sequence numbers and summaries. The
+    * `partitions` summaries let the reader skip whole manifests unread,
+    * so a long append history filters without touching most of its
+    * manifest Avros. Returns the stored path. */
   private def writeManifestList(spark: SparkSession, f: FileSystem, table: String,
       snapshotId: Long,
       manifests: Seq[(String, Long, Long, Int, Boolean, Option[Seq[FieldSummary]])]): String = {
-    val dir = s"${table.stripSuffix("/")}/metadata/snap-$snapshotId-${java.util.UUID.randomUUID()}"
+    val path = new Path(
+      s"${table.stripSuffix("/")}/metadata/snap-$snapshotId-${java.util.UUID.randomUUID()}.avro")
     val sumType = ArrayType(StructType(Seq(
       StructField("contains_null", BooleanType),
       StructField("lower_bound", BinaryType),
@@ -945,16 +946,12 @@ object IcebergWriter {
       StructField("content", IntegerType), StructField("added_snapshot_id", LongType),
       StructField("partitions", sumType)))
     val rows = manifests.map { case (p, len, seq, specId, isDelete, sums) =>
-      org.apache.spark.sql.Row(p, len, seq, specId, if (isDelete) 1 else 0, snapshotId,
-        sums.map(_.map(fs =>
-          org.apache.spark.sql.Row(fs.containsNull, fs.lower.orNull, fs.upper.orNull))).orNull)
+      Row(p, len, seq, specId, if (isDelete) 1 else 0, snapshotId,
+        sums.map(_.map(fs => Row(fs.containsNull, fs.lower.orNull, fs.upper.orNull))).orNull)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .coalesce(1).write.format(AvroFmt).save(dir)
-    storedPath(f.listStatus(new Path(dir))
-      .find(_.getPath.getName.endsWith(".avro")).get.getPath)
+    IcebergManifestCodec.write(path, spark.sparkContext.hadoopConfiguration, schema, rows)
+    storedPath(f.makeQualified(path))
   }
-
 
   /** The Iceberg spec stores timestamps as INT64 micros in parquet data
     * files; Spark's default outputTimestampType is the non-spec INT96
@@ -1886,30 +1883,12 @@ object IcebergWriter {
       .find(_.get("snapshot-id").asLong() == curId)
       .getOrElse(throw new IllegalArgumentException(s"iceberg: snapshot $curId missing from $table"))
     val refs = IcebergReader.manifestListRowsOf(spark, snap.get("manifest-list").asText(), table)
-    if (refs.isEmpty) return (Nil, Nil)
-    // DATA and DELETE manifests load separately: their Avro schemas
-    // differ (delete manifests carry no partition struct), and a mixed
-    // multi-file load would resolve against one group's schema
+    // every manifest parses under its own Avro schema (data and
+    // delete manifests differ), through the reader's manifest cache
     def load(paths: Seq[String]): Seq[(Int, LiveEntry)] =
-      if (paths.isEmpty) Nil
-      else {
-        val manifests = spark.read.format(AvroFmt).load(paths: _*)
-        val dfCols = manifests.select("data_file.*").columns.toSet
-        manifests.selectExpr("status", "data_file.file_path as p",
-            "data_file.file_size_in_bytes as sz", "data_file.record_count as rc",
-            if (dfCols.contains("content")) "data_file.content as c" else "0 as c",
-            if (dfCols.contains("partition")) "to_json(data_file.partition) as pv"
-            else "cast(null as string) as pv",
-            if (dfCols.contains("lower_bounds")) "to_json(data_file.lower_bounds) as lbj"
-            else "cast(null as string) as lbj",
-            if (dfCols.contains("upper_bounds")) "to_json(data_file.upper_bounds) as ubj"
-            else "cast(null as string) as ubj")
-          .collect().toSeq.filter(_.getAs[Int]("status") != 2)
-          .map(r => (Option(r.getAs[Number]("c")).map(_.intValue()).getOrElse(0),
-            LiveEntry(r.getAs[String]("p"), r.getAs[Long]("sz"),
-              r.getAs[Long]("rc"), r.getAs[String]("pv"),
-              r.getAs[String]("lbj"), r.getAs[String]("ubj"))))
-      }
+      paths.flatMap(IcebergReader.manifestEntriesOf(spark, table, _)).filter(_.status != 2)
+        .map(r => (r.content, LiveEntry(r.filePath, r.fileSize.getOrElse(0L),
+          r.recordCount.getOrElse(0L), r.partitionJson, r.lowerJson, r.upperJson)))
     val (delRefs, dataRefs) = refs.partition(_._4)
     val fromData = load(dataRefs.map(_._1))
     val fromDel = load(delRefs.map(_._1))
@@ -2567,9 +2546,10 @@ object IcebergWriter {
     * (a just-renamed file becomes referenced only when its commit
     * lands); metadata/manifests are not touched (expireSnapshots owns
     * those), and `_staging_*` dirs age out the same way. Driver cost:
-    * one listing of data/ plus one distributed read over every
-    * snapshot's manifests. Returns the deleted (or, under `dryRun`,
-    * the would-be-deleted) paths. */
+    * one listing of data/ plus a driver-local parse of every
+    * snapshot's manifests (through the reader's manifest cache).
+    * Returns the deleted (or, under `dryRun`, the would-be-deleted)
+    * paths. */
   def removeOrphanFiles(spark: SparkSession, table: String,
       olderThanMs: Long = 3L * 24 * 3600 * 1000, dryRun: Boolean = false): Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -2583,11 +2563,9 @@ object IcebergWriter {
         .flatMap(s => IcebergReader.manifestListRowsOf(spark,
           s.get("manifest-list").asText(), table).map(_._1))
         .distinct
-    val referenced: Set[String] =
-      if (manifestPaths.isEmpty) Set.empty
-      else spark.read.format(AvroFmt).load(manifestPaths: _*)
-        .selectExpr("data_file.file_path AS p").distinct()
-        .collect().map(r => f.makeQualified(new Path(r.getString(0))).toString).toSet
+    val referenced: Set[String] = manifestPaths
+      .flatMap(IcebergReader.manifestEntriesOf(spark, table, _))
+      .map(e => f.makeQualified(new Path(e.filePath)).toString).toSet
     val dataDir = new Path(table.stripSuffix("/") + "/data")
     if (!f.exists(dataDir)) return Nil
     val cutoff = System.currentTimeMillis() - olderThanMs
@@ -2702,10 +2680,8 @@ object IcebergWriter {
         val manifests = ss.flatMap(s =>
           IcebergReader.manifestListRowsOf(spark, s.get("manifest-list").asText(), table)
             .map(_._1)).toSet
-        val data =
-          if (manifests.isEmpty) Set.empty[String]
-          else spark.read.format(AvroFmt).load(manifests.toSeq: _*)
-            .selectExpr("data_file.file_path as p").collect().map(_.getString(0)).toSet
+        val data = manifests.flatMap(IcebergReader.manifestEntriesOf(spark, table, _))
+          .map(_.filePath)
         (lists, manifests, data)
       }
       val (rLists, rManifests, rData) = refsOf(retained)

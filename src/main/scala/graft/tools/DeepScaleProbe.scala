@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   * contract, not the plan.
   *
   * `sbt "runMain graft.tools.DeepScaleProbe [sf0.1dir] [outBase]
-  * [probe,probe,...]"` — slices land under target/, never under
-  * /root/testdata.
+  * [probe,probe,...]"` — slices and the probes' persisted indexes land
+  * under outBase (default target/deepscale), never under the input
+  * directory.
   */
 object DeepScaleProbe {
 
@@ -140,6 +141,9 @@ object DeepScaleProbe {
     * args(0) so a custom sf0.1 dir splits against the right corpus
     * (review r19 — a hard-coded default silently mis-split). */
   private[tools] var incBaseDir: String = "/root/testdata/sf0.1"
+  /** Root of the derived slices and of the indexes and labels the day-2
+    * probes persist; main() sets it from args(1). */
+  private[tools] var outBase: String = "target/deepscale"
 
   /** A slice's documents and the fixed day-2 batch among them: base-replica
     * ids divisible by 31. */
@@ -166,7 +170,7 @@ object DeepScaleProbe {
 
   private def incrementalProbeFn: (SparkSession, String) => DataFrame = (s, d) => {
     val (docs, isBatch) = fixedBatch(s, d)
-    val idx = "target/deepscale_inc_idx/" + d.replaceAll("[^A-Za-z0-9]", "_")
+    val idx = s"$outBase/inc_idx/" + d.replaceAll("[^A-Za-z0-9]", "_")
     persistOnce(idx)(signatures(s, docs.filter(!isBatch), repartition = true))
     graft.ops.Dedup.incrementalNearDupPairs(signatures(s, docs.filter(isBatch), repartition = false),
       "doc_id", "sig", s.read.parquet(idx), "doc_id", "sig", bands = 16, threshold = 0.5)
@@ -175,7 +179,7 @@ object DeepScaleProbe {
   private def clusterAssignProbeFn: (SparkSession, String) => DataFrame = (s, d) => {
     val (docs, isBatch) = fixedBatch(s, d)
     val hist = docs.filter(!isBatch).select(col("doc_id"), col("text"))
-    val dir = "target/deepscale_cluster_assign/" + d.replaceAll("[^A-Za-z0-9]", "_")
+    val dir = s"$outBase/cluster_assign/" + d.replaceAll("[^A-Za-z0-9]", "_")
     persistOnce(s"$dir/idx")(signatures(s, hist, repartition = true))
     persistOnce(s"$dir/labels")(graft.ops.Dedup.connectedComponents(
       graft.ops.Dedup.minhashNearDupPairs(hist, "doc_id", "text", shingleN = 3, k = 64,
@@ -192,7 +196,7 @@ object DeepScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf01 = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     incBaseDir = sf01
-    val outBase = if (args.length > 1) args(1) else "target/deepscale"
+    args.lift(1).foreach(outBase = _)
     val spark = Engine.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 

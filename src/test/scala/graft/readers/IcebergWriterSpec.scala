@@ -398,18 +398,16 @@ class IcebergWriterSpec extends SparkSpec {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     val t = Files.createTempDirectory("iwsum").toString
-    def manifestDirs: Set[String] =
+    def manifests: Set[String] =
       java.nio.file.Files.list(java.nio.file.Paths.get(s"$t/metadata")).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("m-")).toSet
+        .map(_.getFileName.toString).filter(_.endsWith("-m0.avro")).toSet
     IcebergWriter.write(spark, Seq((1L, 1), (2L, 1)).toDF("id", "p"), t, partitionBy = Seq("p"))
-    val before = manifestDirs
+    val before = manifests
     IcebergWriter.write(spark, Seq((3L, 2), (4L, 2)).toDF("id", "p"), t)
     // corrupt the p=2 append's manifest IN PLACE: a p=1 read can only
     // answer if the manifest LIST's summaries excluded it unread —
     // parsing the Avro is impossible
-    val m2dir = (manifestDirs -- before).head
-    val avro = java.nio.file.Files.list(java.nio.file.Paths.get(s"$t/metadata/$m2dir"))
-      .iterator().asScala.find(_.toString.endsWith(".avro")).get
+    val avro = java.nio.file.Paths.get(s"$t/metadata/${(manifests -- before).head}")
     java.nio.file.Files.write(avro, Array.fill[Byte](64)(0x5a))
     assert(IcebergReader.read(spark, t, filter = Some("p = 1"))
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
