@@ -1217,7 +1217,7 @@ object Dedup {
     // physical compaction there is the writer's OPTIMIZE.
     require(!f.exists(new org.apache.hadoop.fs.Path(p, "_delta_log")),
       s"$path is a Delta table — compactIndexDir is for plain-parquet indexes only " +
-        "(a Delta index has no replay inflation; use DeltaWriter.optimize for physical compaction)")
+        "(a Delta index has no replay inflation; use DeltaWriter.compact (or zorder) for physical compaction)")
     // Snapshot the data-file set BEFORE the read plans its own listing:
     // a concurrent append landing during the (potentially long)
     // dropDuplicates write would otherwise ride the live directory into

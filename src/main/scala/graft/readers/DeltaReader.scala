@@ -12,13 +12,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
 /** Native Delta Lake table reader (published Delta transaction-log
   * protocol; reference readers.py:1108 `scan_delta` / the delta-rs
   * family). Reads a table directory WITHOUT the delta-spark connector
-  * jar by replaying `_delta_log`:
+  * jar:
   *
-  *  1. `_last_checkpoint` (when present) → checkpoint parquet(s) whose
-  *     `add` records are the live files at that version;
-  *  2. the ordered JSON commits after the checkpoint — `add` actions
-  *     insert files, `remove` actions tombstone them, the last
-  *     `metaData`/`protocol` actions win;
+  *  1. [[DeltaLog.snapshot]] — the one log module the writer and the
+  *     `graft-delta` stream share — lists `_delta_log`, replays the
+  *     checkpoint (classic, multipart or v2) and the commits after it
+  *     into a cached snapshot: live adds, the last `metaData` and
+  *     `protocol`;
+  *  2. this reader applies its profile gates (below) to that snapshot
+  *     at read time — the snapshot itself is ungated, so the writer
+  *     replays nothing of its own;
   *  3. partition values come from each file's `add.partitionValues`
   *     (Delta data files do NOT store partition columns), attached as
   *     literal columns cast to the schema's types, one read per
@@ -46,21 +49,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
   * registry.
   *
   * Scale shape: the driver replays only log metadata (JSON lines and a
-  * checkpoint read that projects just `add`/`remove`/`metaData`); data
-  * files never pass through the driver and the parquet scan keeps
-  * pushdown/pruning. Driver state is O(live files) — a LinkedHashMap
-  * of ~200-byte entries, i.e. ~200 MB at 1M files, the same bound
-  * delta-rs carries — and is EXPLICITLY capped at [[DefaultMaxLiveFiles]]
-  * (default 4M ≈ 1 GB peak): the replay refuses loudly past the cap
-  * instead of exhausting driver heap, naming the delta-spark connector
-  * as the path for bigger tables.
+  * checkpoint read that projects just the action columns); data files
+  * never pass through the driver and the parquet scan keeps
+  * pushdown/pruning. Driver state is O(live files) — one snapshot entry
+  * per live add (path, partition values, stats, DV descriptor and the
+  * add as logged, a few hundred bytes), shared by every reader and
+  * writer call on the table — and is EXPLICITLY capped at
+  * [[DefaultMaxLiveFiles]] (default 4M): the replay refuses loudly past
+  * the cap instead of exhausting driver heap, naming the delta-spark
+  * connector as the path for bigger tables. Repeated reads of an
+  * unchanged table replay nothing (a status-only log-tail probe
+  * validates the cached snapshot); new add/remove-only commits replay
+  * incrementally.
   */
 object DeltaReader {
 
   /** Default hard cap on replayed live-file entries (see scale shape
     * above). A `read(maxLiveFiles = ...)` parameter rather than mutable
     * global state: specs exercising the refusal pass a small value, and
-    * concurrent reads in one JVM can't race each other's caps. */
+    * concurrent reads in one JVM can't race each other's caps. The
+    * writer reads its head snapshot under this default. */
   val DefaultMaxLiveFiles: Int = 4_000_000
 
   // private[readers]: IcebergReader reuses the descriptor + decode for
@@ -68,8 +76,6 @@ object DeltaReader {
   // design of the Iceberg v3 spec)
   private[readers] case class DvDescriptor(storageType: String, pathOrInlineDv: String,
       offset: Int, sizeInBytes: Int, cardinality: Long)
-  private case class FileEntry(path: String, partitionValues: Map[String, Option[String]],
-      dv: Option[DvDescriptor], stats: Option[String])
 
   // ---- deletion vectors (delta PROTOCOL.md "Deletion Vectors") --------
 
@@ -245,51 +251,29 @@ object DeltaReader {
   def readChangesSince(spark: SparkSession, table: String, sinceVersion: Long,
       maxPartitionScans: Int = 64, filter: Option[String] = None,
       maxLiveFiles: Int = DefaultMaxLiveFiles): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = table.stripSuffix("/") + "/_delta_log"
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(new Path(logDir)), s"not a delta table (no _delta_log): $table")
-    val commitStatuses = f.listStatus(new Path(logDir)).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .map(st => st.getPath.getName.stripSuffix(".json").toLong -> st)
-      .sortBy(_._1)
-    val mapper = new ObjectMapper()
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    val cpV =
-      if (!f.exists(lastCp)) -1L
-      else { val in = f.open(lastCp); try mapper.readTree(in).get("version").asLong() finally in.close() }
-    val head = math.max(cpV, commitStatuses.map(_._1).maxOption.getOrElse(-1L))
-    require(head >= 0, s"delta: empty _delta_log at $logDir")
+    val ls = DeltaLog.list(spark, table)
+    val head = ls.requireHead
     require(sinceVersion <= head,
       s"delta: changes since version $sinceVersion requested but table head is $head")
     if (sinceVersion == head)
       return emptyChangesFrame(spark, table, maxPartitionScans, maxLiveFiles)
-    val window = commitStatuses.filter { case (v, _) => v > sinceVersion && v <= head }
-    val missing = ((math.max(sinceVersion, -1L) + 1) to head).toSet -- window.map(_._1).toSet
-    require(missing.isEmpty,
-      s"delta: cannot serve changes since $sinceVersion — commit json(s) " +
-        s"${missing.toSeq.sorted.mkString(", ")} missing from _delta_log (expired/cleaned log); " +
-        "re-baseline with a full read")
     // last add version per path across the window, + per-commit timestamp
     val addVersion = scala.collection.mutable.HashMap[String, (Long, Long)]()
-    window.foreach { case (v, st) =>
-      var commitTs = st.getModificationTime
-      val in = f.open(st.getPath)
-      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val lines = text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map(mapper.readTree).toSeq
-      lines.foreach(a => Option(a.get("commitInfo")).flatMap(ci => Option(ci.get("timestamp")))
-        .filterNot(_.isNull).foreach(ts => commitTs = ts.asLong()))
+    ls.window(sinceVersion, head, "changes").foreach { c =>
+      val v = c.version
+      val lines = DeltaLog.readActions(ls.fs, c.status.getPath)
+      val commitTs = DeltaLog.commitTimestamp(c, lines)
       // dataChange=false adds are rearrangements (OPTIMIZE/compaction):
       // their rows are OLD rows in new files — surfacing them would
       // duplicate data for an incremental consumer, so they are skipped
       // exactly as the connector's CDF skips dataChange=false commits
       lines.foreach(a => Option(a.get("add")).filterNot(_.isNull)
-        .filter(add => Option(add.get("dataChange")).forall(n => n.isNull || n.asBoolean()))
+        .filter(DeltaLog.dataChange)
         .foreach(add => addVersion(add.get("path").asText()) = (v, commitTs)))
       lines.foreach(a => Option(a.get("remove")).filterNot(_.isNull).foreach { rm =>
         val p = rm.get("path").asText()
         if (addVersion.contains(p)) {
-          val realDelete = Option(rm.get("dataChange")).forall(n => n.isNull || n.asBoolean())
+          val realDelete = DeltaLog.dataChange(rm)
           // a compaction remove of an IN-WINDOW add moves those arrivals
           // into dataChange=false files this adds-only reader skips —
           // serving the window would silently lose them; refuse loudly
@@ -373,25 +357,13 @@ object DeltaReader {
       endVersion: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_millis}
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = table.stripSuffix("/") + "/_delta_log"
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(new Path(logDir)), s"not a delta table (no _delta_log): $table")
-    val state = cachedState(spark, table, logDir, f, None, maxLiveFiles)
-    val schema = DataType.fromJson(state.schemaJson).asInstanceOf[StructType]
+    val state = gated(DeltaLog.snapshot(spark, table, None, maxLiveFiles))
+    val schema = state.schema
     val partitionCols = state.partitionCols
-    val mapped = state.configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-    val mapper = new ObjectMapper()
-    val commitStatuses = f.listStatus(new Path(logDir)).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .map(st => st.getPath.getName.stripSuffix(".json").toLong -> st)
-      .sortBy(_._1)
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    val cpV =
-      if (!f.exists(lastCp)) -1L
-      else { val in = f.open(lastCp); try mapper.readTree(in).get("version").asLong() finally in.close() }
-    val tableHead = math.max(cpV, commitStatuses.map(_._1).maxOption.getOrElse(-1L))
-    require(tableHead >= 0, s"delta: empty _delta_log at $logDir")
+    val mapped = state.mappingMode != "none"
+    val ls = DeltaLog.list(spark, table)
+    val f = ls.fs
+    val tableHead = ls.requireHead
     // an explicit end bounds the window (the table_changes
     // (start, end) form); the head STATE still governs the serving
     // schema, and the post-end gate below keeps that sound
@@ -421,12 +393,7 @@ object DeltaReader {
         .withColumn("_commit_timestamp", lit(null).cast(org.apache.spark.sql.types.TimestampType))
         .where(lit(false))
     if (sinceVersion == head) return emptyFeed()
-    val window = commitStatuses.filter { case (v, _) => v > sinceVersion && v <= head }
-    val missing = ((math.max(sinceVersion, -1L) + 1) to head).toSet -- window.map(_._1).toSet
-    require(missing.isEmpty,
-      s"delta: cannot serve the change feed since $sinceVersion — commit json(s) " +
-        s"${missing.toSeq.sorted.mkString(", ")} missing from _delta_log (expired/cleaned log); " +
-        "re-baseline with a full read")
+    val window = ls.window(sinceVersion, head, "the change feed")
 
     // With an explicit end, the in-window metadata gate alone is not
     // enough: a NON-ADDITIVE evolution committed AFTER endVersion
@@ -439,14 +406,12 @@ object DeltaReader {
     // head-schema serving nulls the appended columns exactly like
     // delta's own old-file semantics, and anything else refuses.
     endVersion.filter(_ < tableHead).foreach { e =>
-      val endState = cachedState(spark, table, logDir, f, Some(e), maxLiveFiles)
-      val endSchema = DataType.fromJson(endState.schemaJson).asInstanceOf[StructType]
+      val endState = gated(DeltaLog.snapshot(spark, table, Some(e), maxLiveFiles))
+      val endSchema = endState.schema
       val additive = endSchema.fields.length <= schema.fields.length &&
         endSchema.fields.zip(schema.fields).forall { case (a, b) => evoKey(a) == evoKey(b) }
       val samePc = endState.partitionCols == partitionCols
-      val sameMapping =
-        endState.configuration.getOrElse("delta.columnMapping.mode", "none") ==
-          state.configuration.getOrElse("delta.columnMapping.mode", "none")
+      val sameMapping = endState.mappingMode == state.mappingMode
       require(additive && samePc && sameMapping,
         s"delta: change feed window ($sinceVersion, $e] unservable — the table metadata " +
           "changed after the window end beyond additive column evolution, so window rows " +
@@ -456,13 +421,10 @@ object DeltaReader {
     // None changeType = a cdc file (rows carry their own _change_type)
     case class FileChange(path: String, pv: Map[String, Option[String]], changeType: Option[String])
     case class CommitChanges(version: Long, tsMs: Long, files: Seq[FileChange])
-    val perCommit: Seq[CommitChanges] = window.map { case (v, st) =>
-      val in = f.open(st.getPath)
-      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val lines = text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map(mapper.readTree).toSeq
-      var commitTs = st.getModificationTime
-      lines.foreach(a => Option(a.get("commitInfo")).flatMap(ci => Option(ci.get("timestamp")))
-        .filterNot(_.isNull).foreach(ts => commitTs = ts.asLong()))
+    val perCommit: Seq[CommitChanges] = window.map { c =>
+      val v = c.version
+      val lines = DeltaLog.readActions(f, c.status.getPath)
+      val commitTs = DeltaLog.commitTimestamp(c, lines)
       lines.flatMap(a => Option(a.get("metaData")).filterNot(_.isNull)).foreach { md =>
         // additive evolution is servable: a window metaData whose schema
         // is a PREFIX of the head's (same identities+types in order;
@@ -482,7 +444,7 @@ object DeltaReader {
           .getOrElse(Nil) == partitionCols
         val sameMapping = Option(md.get("configuration")).flatMap(c =>
           Option(c.get("delta.columnMapping.mode")).map(_.asText())).getOrElse("none") ==
-          state.configuration.getOrElse("delta.columnMapping.mode", "none")
+          state.mappingMode
         require(okSchema && samePc && sameMapping,
           s"delta: change feed since $sinceVersion unservable — version $v changes the table " +
             "metadata (schema/partitioning/column mapping) beyond additive column evolution; " +
@@ -501,14 +463,12 @@ object DeltaReader {
         partitionCols.forall(pc =>
           pvm.contains(physNameOf(schema(pc), mapped)) || pvm.contains(pc))
       }
-      def isDataChange(n: JsonNode): Boolean =
-        Option(n.get("dataChange")).forall(x => x.isNull || x.asBoolean())
       val cdcs = lines.flatMap(a => Option(a.get("cdc")).filterNot(_.isNull))
         .map(c => FileChange(c.get("path").asText(), pvOfNode(c), None))
       if (cdcs.nonEmpty) CommitChanges(v, commitTs, cdcs)
       else {
-        val adds = lines.flatMap(a => Option(a.get("add")).filterNot(_.isNull)).filter(isDataChange)
-        val removes = lines.flatMap(a => Option(a.get("remove")).filterNot(_.isNull)).filter(isDataChange)
+        val adds = lines.flatMap(a => Option(a.get("add")).filterNot(_.isNull)).filter(DeltaLog.dataChange)
+        val removes = lines.flatMap(a => Option(a.get("remove")).filterNot(_.isNull)).filter(DeltaLog.dataChange)
         (adds ++ removes).foreach { n =>
           require(Option(n.get("deletionVector")).forall(_.isNull),
             s"delta: change feed since $sinceVersion unservable — version $v changes rows " +
@@ -583,25 +543,8 @@ object DeltaReader {
 
   /** The table's current version: max(checkpoint version, newest
     * commit json). The streaming source's `getOffset` probe. */
-  private[readers] def currentVersion(spark: SparkSession, table: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = table.stripSuffix("/") + "/_delta_log"
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(new Path(logDir)), s"not a delta table (no _delta_log): $table")
-    val maxCommit = f.listStatus(new Path(logDir)).toSeq
-      .map(_.getPath.getName).filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong).maxOption.getOrElse(-1L)
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    val cpV =
-      if (!f.exists(lastCp)) -1L
-      else {
-        val in = f.open(lastCp)
-        try new ObjectMapper().readTree(in).get("version").asLong() finally in.close()
-      }
-    val v = math.max(maxCommit, cpV)
-    require(v >= 0, s"delta: empty _delta_log at $logDir")
-    v
-  }
+  private[readers] def currentVersion(spark: SparkSession, table: String): Long =
+    DeltaLog.list(spark, table).requireHead
 
   /** Schema without touching any data file (the deferred/streaming
     * registration probe). */
@@ -630,39 +573,16 @@ object DeltaReader {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val mapper = new ObjectMapper()
-    val rows = f.listStatus(logDir).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .sortBy(-_.getPath.getName.stripSuffix(".json").toLong)
-      .map { st =>
-        val version = st.getPath.getName.stripSuffix(".json").toLong
-        val in = f.open(st.getPath)
-        val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        var ts: Long = st.getModificationTime
-        var op: String = null
-        var adds = 0L; var removes = 0L; var dataChange = false
-        text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-          val a = mapper.readTree(line)
-          Option(a.get("commitInfo")).filterNot(_.isNull).foreach { ci =>
-            Option(ci.get("timestamp")).filterNot(_.isNull).foreach(t => ts = t.asLong())
-            Option(ci.get("operation")).filterNot(_.isNull).foreach(o => op = o.asText())
-          }
-          Option(a.get("add")).filterNot(_.isNull).foreach { ad =>
-            adds += 1
-            if (Option(ad.get("dataChange")).forall(_.asBoolean())) dataChange = true
-          }
-          Option(a.get("remove")).filterNot(_.isNull).foreach { rm =>
-            removes += 1
-            if (Option(rm.get("dataChange")).forall(_.asBoolean())) dataChange = true
-          }
-        }
-        Row(version, new java.sql.Timestamp(ts), op, adds, removes, dataChange)
-      }
+    val ls = DeltaLog.list(spark, table)
+    val rows = ls.commits.reverse.map { c =>
+      val actions = DeltaLog.readActions(ls.fs, c.status.getPath)
+      def of(kind: String): Seq[JsonNode] = actions.flatMap(a => Option(a.get(kind)).filterNot(_.isNull))
+      val op = of("commitInfo").flatMap(ci => Option(ci.get("operation")).filterNot(_.isNull))
+        .lastOption.map(_.asText()).orNull
+      val files = of("add") ++ of("remove")
+      Row(c.version, new java.sql.Timestamp(DeltaLog.commitTimestamp(c, actions)), op,
+        of("add").size.toLong, of("remove").size.toLong, files.exists(DeltaLog.dataChange))
+    }
     spark.createDataFrame(rows.asJava, StructType(Seq(
       StructField("version", LongType),
       StructField("timestamp", TimestampType),
@@ -674,46 +594,21 @@ object DeltaReader {
 
   /** DESCRIBE DETAIL (delta-spark's `DeltaTable.detail`): ONE row of
     * table-level facts — format, id, location, partitioning, live
-    * file count/bytes, configuration, protocol — from the same state
-    * replay every read performs (no data IO). */
+    * file count/bytes, configuration, protocol — from the same snapshot
+    * every read uses (no data IO; the protocol survives log cleanup
+    * through the checkpoint). */
   def detail(spark: SparkSession, table: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = table.stripSuffix("/") + "/_delta_log"
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(new Path(logDir)), s"not a delta table (no _delta_log): $table")
-    val state = DeltaWriter.currentState(spark, table)
-    val mapper = new ObjectMapper()
-    val (id, createdAt) = scala.util.Try {
-      val md = mapper.readTree(state.metaJson)
-      (Option(md.get("id")).map(_.asText()).orNull,
-        Option(md.get("createdTime")).filterNot(_.isNull).map(_.asLong()))
-    }.getOrElse((null, None))
-    val configuration: Map[String, String] = scala.util.Try {
-      import scala.jdk.CollectionConverters._
-      Option(mapper.readTree(state.metaJson).get("configuration"))
-        .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(Map.empty[String, String])
-    }.getOrElse(Map.empty)
-    // protocol: last action wins, replayed from the same log walk
-    val commits = f.listStatus(new Path(logDir)).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json")).sortBy(_.getPath.getName)
-    val proto = commits.reverseIterator.flatMap { st =>
-      val in = f.open(st.getPath)
-      val t = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      t.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map(mapper.readTree)
-        .flatMap(a => Option(a.get("protocol")).filterNot(_.isNull)).toSeq.lastOption
-    }.toSeq.headOption
-    val (rv, wv) = proto.map(p => (
-      Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1),
-      Option(p.get("minWriterVersion")).map(_.asInt()).getOrElse(2))).getOrElse((1, 2))
-    val row = Row("delta", id, table.stripSuffix("/"),
+    val state = DeltaLog.snapshot(spark, table)
+    val md = new ObjectMapper().readTree(state.metaJson)
+    val createdAt = Option(md.get("createdTime")).filterNot(_.isNull).map(_.asLong())
+    val row = Row("delta", Option(md.get("id")).map(_.asText()).orNull, table.stripSuffix("/"),
       createdAt.map(new java.sql.Timestamp(_)).orNull,
       state.partitionCols.toList, state.liveFiles.size.toLong,
-      state.liveFiles.map(_.size).sum, configuration, rv, wv)
+      state.liveFiles.map(_.size).sum, state.configuration,
+      state.minReaderVersion, state.minWriterVersion)
     spark.createDataFrame(Seq(row).asJava, StructType(Seq(
       StructField("format", StringType),
       StructField("id", StringType),
@@ -738,14 +633,8 @@ object DeltaReader {
     // timestamp at-or-after now) tracks the live tail, and self-join
     // legs of one query must not watch it move mid-planning
     val version = graft.plans.SnapshotPin.pin(s"delta-asof:$table:$timestampMs") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val logDir = table.stripSuffix("/") + "/_delta_log"
-      val f = FileSystem.get(new URI(table).resolve("/"), conf)
-      require(f.exists(new Path(logDir)), s"not a delta table (no _delta_log): $table")
-      val commits = f.listStatus(new Path(logDir)).toSeq
-        .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-        .map(st => st.getPath.getName.stripSuffix(".json").toLong -> st.getModificationTime)
-        .sortBy(_._1)
+      val commits = DeltaLog.list(spark, table).commits
+        .map(c => c.version -> c.status.getModificationTime)
       val eligible = commits.filter(_._2 <= timestampMs)
       require(eligible.nonEmpty,
         s"delta: no commit at or before timestamp $timestampMs (earliest is ${commits.headOption.map(_._2).getOrElse(-1L)})")
@@ -754,374 +643,24 @@ object DeltaReader {
     readImpl(spark, table, Some(version), maxPartitionScans, filter, maxLiveFiles, schemaOnly)
   }
 
-  /** Fully-replayed snapshot state for one (table, pin): everything the
-    * scan build needs that is filter-INDEPENDENT. Immutable once built;
-    * safe to share across queries. */
-  private case class DeltaState(
-      live: Vector[FileEntry], schemaJson: String, partitionCols: Seq[String],
-      configuration: Map[String, String])
-
-  // Snapshot cache (repeated queries over a deferred view must not pay
-  // the full O(files) checkpoint + commit replay at every plan). Keyed
-  // by (table, version pin, cap); an UNPINNED entry is validated by a
-  // cheap log-tail probe — one listStatus of _delta_log plus the tiny
-  // _last_checkpoint read — so live-snapshot semantics is preserved: a
-  // new commit bumps the tail version and forces a fresh replay, while
-  // an unchanged table replays nothing (commit bodies and checkpoint
-  // parquet are immutable once written, so re-parsing them could only
-  // reproduce the cached state). Bounded by TOTAL cached live-file
-  // entries (the same order of driver state as ONE maximal read — a
-  // per-table-count bound would multiply the documented maxLiveFiles
-  // residency by the table count), LRU eviction.
-  /** Cache-validation token. Version numbers alone are NOT identity:
-    * Delta commit filenames are pure version counters, so a table
-    * deleted and regenerated at the same path with the same commit
-    * count reproduces (cpVersion, tailVersion) exactly — the ADVICE
-    * r10 staleness hole. The ANCHOR file's modificationTime + length
-    * (the tail commit json, or `_last_checkpoint` for a commit-free
-    * log) come from the listStatus the probe already runs — zero extra
-    * IO — and a regenerated log rewrites that file, so the token
-    * changes. Pinned (versionAsOf) entries carry the same anchor
-    * (cpVersion slot = -2): their replayed state is immutable only
-    * while the TABLE is the same table, so a hit now validates the
-    * pinned commit file's current status too. */
-  private case class ProbeToken(cpVersion: Long, tailVersion: Long,
-      anchorMtime: Long, anchorLen: Long)
-
-  private val StateCacheMaxEntries: Long = DefaultMaxLiveFiles.toLong
-  private val stateCache = new java.util.LinkedHashMap[
-      (String, Option[Long], Int), (ProbeToken, DeltaState)](16, 0.75f, true)
-  private var stateCacheEntries = 0L // guarded by stateCache's lock
-  private def stateCacheGet(key: (String, Option[Long], Int)): Option[(ProbeToken, DeltaState)] =
-    stateCache.synchronized(Option(stateCache.get(key)))
-  private def stateCachePut(key: (String, Option[Long], Int),
-      value: (ProbeToken, DeltaState)): Unit = stateCache.synchronized {
-    if (value._2.live.length <= StateCacheMaxEntries) {
-      Option(stateCache.put(key, value)).foreach(old => stateCacheEntries -= old._2.live.length)
-      stateCacheEntries += value._2.live.length
-      val it = stateCache.entrySet().iterator()
-      while (stateCacheEntries > StateCacheMaxEntries && it.hasNext) {
-        val e = it.next(); stateCacheEntries -= e.getValue._2.live.length; it.remove()
-      }
-    }
-  }
-
-  /** (mtime, length) of the file that anchors a token's identity, or
-    * (-1, -1) when it does not exist. */
-  private def anchorStatus(f: FileSystem, p: Path): (Long, Long) =
-    scala.util.Try {
-      val st = f.getFileStatus(p); (st.getModificationTime, st.getLen)
-    }.getOrElse((-1L, -1L))
-
-  private def cachedState(spark: SparkSession, table: String, logDir: String,
-      f: FileSystem, versionAsOf: Option[Long], maxLiveFiles: Int): DeltaState = {
-    val probe: ProbeToken = versionAsOf match {
-      // a pinned version's replayed state is immutable, but only while
-      // the table IS that table — anchor on the pinned commit file (or
-      // `_last_checkpoint` when the json was vacuumed into a
-      // checkpoint) so a regenerate-in-place at the same path misses
-      case Some(v) => graft.plans.SnapshotPin.pin(s"delta-pin:$table:$v") {
-        val commitP = new Path(logDir, f"$v%020d.json")
-        val (m, l) =
-          if (f.exists(commitP)) anchorStatus(f, commitP)
-          else anchorStatus(f, new Path(logDir, "_last_checkpoint"))
-        ProbeToken(-2L, v, m, l)
-      }
-      // pinned per planning pass: sibling legs of one query resolve the
-      // same tail token, so they share one cache entry (one snapshot)
-      // even if a writer commits mid-planning
-      case None => graft.plans.SnapshotPin.pin(s"delta:$table") {
-        val mapper = new ObjectMapper()
-        val lastCp = new Path(logDir, "_last_checkpoint")
-        val cpV =
-          if (!f.exists(lastCp)) -1L
-          else {
-            val in = f.open(lastCp)
-            try mapper.readTree(in).get("version").asLong() finally in.close()
-          }
-        val commitStatuses = f.listStatus(new Path(logDir)).toSeq
-          .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-          .map(st => st.getPath.getName.stripSuffix(".json").toLong -> st)
-        val (anchorM, anchorL) = commitStatuses.maxByOption(_._1) match {
-          case Some((_, st)) => (st.getModificationTime, st.getLen)
-          case None          => anchorStatus(f, lastCp) // commit-free log
-        }
-        ProbeToken(cpV, commitStatuses.map(_._1).maxOption.getOrElse(-1L), anchorM, anchorL)
-      }
-    }
-    val key = (table, versionAsOf, maxLiveFiles)
-    stateCacheGet(key) match {
-      case Some((tok, st)) if tok == probe => st
-      case cached =>
-        // a stale UNPINNED entry first tries INCREMENTAL replay: apply
-        // only the commits past the cached tail instead of re-reading
-        // the checkpoint parquet (a Spark job at large file counts) and
-        // the whole commit chain per new commit
-        val st = cached
-          .filter(_ => versionAsOf.isEmpty)
-          .flatMap { case (cachedTok, old) =>
-            // a checkpoint-only state (no commit jsons at read time) has
-            // tail -1 but IS the state at the checkpoint version — later
-            // commits chain from max(checkpoint, tail), not from 0
-            incrementalState(logDir, f, old, cachedTok,
-              math.max(cachedTok.cpVersion, cachedTok.tailVersion),
-              probe.tailVersion, maxLiveFiles)
-          }
-          .getOrElse(replayState(spark, table, logDir, f, versionAsOf, maxLiveFiles))
-        stateCachePut(key, (probe, st))
-        st
-    }
-  }
-
-  /** One add action → [[FileEntry]], shared by the full and incremental
-    * replay paths so their parse semantics cannot drift. */
-  private def parseFileEntry(node: JsonNode): FileEntry = {
+  /** The reader's profile gates, applied to the shared snapshot at
+    * read time: parquet tables with `minReaderVersion` 1, or 2/3 with
+    * reader features limited to timestampNtz/v2Checkpoint/
+    * deletionVectors/columnMapping, a known column mapping mode, and
+    * at least one live data file. */
+  private def gated(s: DeltaLog.Snapshot): DeltaLog.Snapshot = {
     import scala.jdk.CollectionConverters._
-    val pv = Option(node.get("partitionValues")).map(_.properties().asScala.map(e =>
-      e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))).toMap)
-      .getOrElse(Map.empty[String, Option[String]])
-    val dv = Option(node.get("deletionVector")).filterNot(_.isNull).map { d =>
-      DvDescriptor(d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
-        Option(d.get("offset")).filterNot(_.isNull).map(_.asInt()).getOrElse(0),
-        d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
-    }
-    val stats = Option(node.get("stats")).filterNot(_.isNull).map(_.asText()).filter(_.nonEmpty)
-    FileEntry(node.get("path").asText(), pv, dv, stats)
-  }
-
-  /** Incremental replay: apply commits (cachedTail, newTail] on top of
-    * a cached state. ONLY add/remove actions apply incrementally — a
-    * commit carrying metaData or protocol changes the schema/profile
-    * surface the full replay gates, so it returns None and the caller
-    * falls back to the full path (rare events: schema evolution,
-    * feature enablement). None likewise on any missing commit in the
-    * window or other surprise — fail open to the full replay, never
-    * guess.
-    *
-    * Prefix guard: chaining is sound only if the cached state's OWN
-    * history is still the table's history. A table regenerated in
-    * place with MORE commits than the cached tail would otherwise
-    * chain the new tail onto a dead table's state — so the cached
-    * token's anchor file (tail commit json, or `_last_checkpoint` for
-    * a checkpoint-only state) must still exist with the same
-    * mtime+length, else fall back to the full replay. */
-  private def incrementalState(logDir: String, f: FileSystem, cached: DeltaState,
-      cachedTok: ProbeToken, cachedTail: Long, newTail: Long,
-      maxLiveFiles: Int): Option[DeltaState] = scala.util.Try {
-    if (newTail <= cachedTail) return None
-    val anchorP =
-      if (cachedTok.tailVersion >= 0) new Path(logDir, f"${cachedTok.tailVersion}%020d.json")
-      else new Path(logDir, "_last_checkpoint")
-    if (anchorStatus(f, anchorP) != ((cachedTok.anchorMtime, cachedTok.anchorLen))) return None
-    val mapper = new ObjectMapper()
-    val live = scala.collection.mutable.LinkedHashMap[String, FileEntry]() ++=
-      cached.live.map(e => e.path -> e)
-    for (v <- (cachedTail + 1) to newTail) {
-      val p = new Path(logDir, f"$v%020d.json")
-      if (!f.exists(p)) return None // gap: let the full replay diagnose
-      val in = f.open(p)
-      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val action = mapper.readTree(line)
-        if (action.has("metaData") || action.has("protocol")) return None
-        Option(action.get("add")).filterNot(_.isNull).foreach { add =>
-          val e = parseFileEntry(add)
-          live(e.path) = e
-          require(live.size <= maxLiveFiles,
-            s"delta: table has more than $maxLiveFiles live files — beyond this native reader's " +
-              "driver-state bound; read it with the delta-spark connector jar on the classpath")
-        }
-        Option(action.get("remove")).filterNot(_.isNull)
-          .foreach(rm => live.remove(rm.get("path").asText()))
-      }
-    }
-    require(live.nonEmpty, s"delta: table has no live data files")
-    Some(cached.copy(live = live.values.toVector))
-  }.toOption.flatten
-
-  /** Full log replay to the pinned (or latest) version: checkpoint
-    * state + ordered JSON commits → live-file set, schema, partition
-    * columns, table configuration — with the profile gates applied, so
-    * a cached state is always a readable one. */
-  private def replayState(spark: SparkSession, table: String, logDir: String,
-      f: FileSystem, versionAsOf: Option[Long], maxLiveFiles: Int): DeltaState = {
-    val mapper = new ObjectMapper()
-
-    // checkpoint hint (skipped when pinned before the checkpoint —
-    // a checkpoint state can't be rolled back)
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    val (cpVersion, cpFiles): (Long, Seq[String]) =
-      if (f.exists(lastCp)) {
-        val in = f.open(lastCp)
-        val node = try mapper.readTree(in) finally in.close()
-        val v = node.get("version").asLong()
-        val parts = Option(node.get("parts")).map(_.asInt())
-        if (versionAsOf.exists(_ < v)) (-1L, Nil) // pinned before the checkpoint: replay commits only
-        else parts match {
-          case Some(n) =>
-            // multipart classic: EVERY part or refuse — replaying a
-            // subset silently truncates the live-file set
-            val all = (1 to n).map(i => f"$logDir/$v%020d.checkpoint.$i%010d.$n%010d.parquet")
-            val missing = all.filterNot(p => f.exists(new Path(p)))
-            require(missing.isEmpty,
-              s"delta: multipart checkpoint $v incomplete — missing ${missing.mkString(", ")}")
-            (v, all)
-          case None =>
-            val classic = f"$logDir/$v%020d.checkpoint.parquet"
-            if (f.exists(new Path(classic))) (v, Seq(classic))
-            else {
-              // v2 checkpoints (PROTOCOL.md "V2 Checkpoint Table Feature")
-              // are UUID-named — <version>.checkpoint.<uuid>.{json,parquet}
-              // — and may park their file actions in _sidecars. Match the
-              // uuid shape ONLY, so a stray multipart part can't be
-              // mistaken for a complete checkpoint.
-              val uuidName = (f"$v%020d" + "\\.checkpoint\\.[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}\\.(parquet|json)").r
-              val v2 = f.listStatus(new Path(logDir)).toSeq.map(_.getPath)
-                .filter(p => uuidName.matches(p.getName)).map(_.toString)
-              require(v2.nonEmpty,
-                s"delta: _last_checkpoint names version $v but no classic or v2 checkpoint file matches in $logDir")
-              (v, v2.take(1))
-            }
-        }
-      } else (-1L, Nil)
-
-    val allCommits = f.listStatus(new Path(logDir)).toSeq.map(_.getPath)
-      .filter(_.getName.matches("\\d{20}\\.json"))
-      .map(p => p.getName.stripSuffix(".json").toLong -> p)
-    versionAsOf.foreach { v =>
-      require(cpVersion == v || allCommits.exists(_._1 == v),
-        s"delta: version $v not present in _delta_log (vacuumed or never written)")
-    }
-    val commits = allCommits
-      .filter(_._1 > cpVersion)
-      .filter(c => versionAsOf.forall(c._1 <= _))
-      .sortBy(_._1)
-    require(cpVersion >= 0 || commits.nonEmpty, s"delta: empty _delta_log at $logDir")
-    // the replayed chain must be gap-free from the checkpoint (or 0) to
-    // the target — a vacuumed or partially-listed log otherwise yields a
-    // silently incomplete live-file set
-    val versionsSeen = commits.map(_._1)
-    val replayTarget = versionAsOf.getOrElse(versionsSeen.lastOption.getOrElse(cpVersion))
-    val expectedVersions = ((cpVersion + 1) to replayTarget).toSeq
-    require(versionsSeen == expectedVersions,
-      s"delta: commit chain incomplete — have [${versionsSeen.mkString(",")}], need [${expectedVersions.mkString(",")}] (expired log or partial listing)")
-
-    val live = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
-    var schemaJson: String = null
-    var partitionCols: Seq[String] = Nil
-    var configuration: Map[String, String] = Map.empty
-    var provider: String = "parquet"
-    var minReader = 1
-    var readerFeatures: Seq[String] = Nil
-
-    def applyMeta(m: JsonNode): Unit = {
-      schemaJson = Option(m.get("schemaString")).map(_.asText()).getOrElse(schemaJson)
-      import scala.jdk.CollectionConverters._
-      partitionCols = Option(m.get("partitionColumns")).map(_.elements().asScala.map(_.asText()).toSeq)
-        .getOrElse(partitionCols)
-      configuration = Option(m.get("configuration")).map(c =>
-        c.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(configuration)
-      provider = Option(m.get("format")).flatMap(fm => Option(fm.get("provider"))).map(_.asText()).getOrElse(provider)
-    }
-    def applyProtocol(p: JsonNode): Unit = {
-      import scala.jdk.CollectionConverters._
-      minReader = Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(minReader)
-      readerFeatures = Option(p.get("readerFeatures")).map(_.elements().asScala.map(_.asText()).toSeq)
-        .getOrElse(readerFeatures)
-    }
-    // 1. checkpoint state (adds are the live set at cpVersion). Removes
-    // in a checkpoint are retention tombstones, never live state.
-    def applyAdd(node: JsonNode): Unit = {
-      val e = parseFileEntry(node)
-      live(e.path) = e
-      // checked on insert so peak driver memory is bounded by the cap,
-      // not by however many adds a hostile/huge log contains
-      require(live.size <= maxLiveFiles,
-        s"delta: table has more than $maxLiveFiles live files — beyond this native reader's " +
-          "driver-state bound; read it with the delta-spark connector jar on the classpath")
-    }
-    val sidecarPaths = Seq.newBuilder[String]
-    def applySidecar(node: JsonNode): Unit = {
-      val p = node.get("path").asText()
-      sidecarPaths += (if (p.contains("://") || p.startsWith("/")) p else s"$logDir/_sidecars/$p")
-    }
-    if (cpFiles.nonEmpty) {
-      if (cpFiles.forall(_.endsWith(".json"))) {
-        // v2 json manifest: one action per line, like a commit file
-        cpFiles.foreach { p =>
-          val in = f.open(new Path(p))
-          val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-          text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-            val action = mapper.readTree(line)
-            Option(action.get("metaData")).foreach(applyMeta)
-            Option(action.get("protocol")).foreach(applyProtocol)
-            Option(action.get("add")).filterNot(_.isNull).foreach(applyAdd)
-            Option(action.get("sidecar")).filterNot(_.isNull).foreach(applySidecar)
-          }
-        }
-      } else {
-        val cp = spark.read.parquet(cpFiles: _*)
-        val cols = cp.columns.toSet
-        // count BEFORE collect: the cap must bound peak driver memory,
-        // not fire after a 50M-add checkpoint has already materialized
-        def checkAddCap(df: org.apache.spark.sql.DataFrame): Unit = {
-          val n = df.where(col("add").isNotNull).count()
-          require(n <= maxLiveFiles,
-            s"delta: checkpoint lists $n add actions, more than $maxLiveFiles — beyond this " +
-              "native reader's driver-state bound; read it with the delta-spark connector jar on the classpath")
-        }
-        def jsonRows(c: String): Seq[JsonNode] =
-          cp.where(col(c).isNotNull)
-            .select(org.apache.spark.sql.functions.to_json(col(c)))
-            .collect().toSeq.map(r => mapper.readTree(r.getString(0)))
-        if (cols.contains("metaData")) jsonRows("metaData").foreach(applyMeta)
-        if (cols.contains("protocol")) jsonRows("protocol").foreach(applyProtocol)
-        if (cols.contains("add")) { checkAddCap(cp); jsonRows("add").foreach(applyAdd) }
-        if (cols.contains("sidecar")) jsonRows("sidecar").foreach(applySidecar)
-      }
-      // v2 sidecar parquets hold the checkpoint's file actions
-      val sidecars = sidecarPaths.result()
-      if (sidecars.nonEmpty) {
-        val sc = spark.read.parquet(sidecars: _*)
-        if (sc.columns.contains("add")) {
-          val n = sc.where(col("add").isNotNull).count()
-          require(n <= maxLiveFiles,
-            s"delta: checkpoint sidecars list $n add actions, more than $maxLiveFiles — beyond this " +
-              "native reader's driver-state bound; read it with the delta-spark connector jar on the classpath")
-          sc.where(col("add").isNotNull)
-            .select(org.apache.spark.sql.functions.to_json(col("add")))
-            .collect().toSeq.map(r => mapper.readTree(r.getString(0)))
-            .foreach(applyAdd)
-        }
-      }
-    }
-
-    // 2. replay JSON commits in order
-    commits.foreach { case (_, p) =>
-      val in = f.open(p)
-      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val action = mapper.readTree(line)
-        Option(action.get("metaData")).foreach(applyMeta)
-        Option(action.get("protocol")).foreach(applyProtocol)
-        Option(action.get("add")).foreach(applyAdd)
-        Option(action.get("remove")).foreach(rm => live.remove(rm.get("path").asText()))
-      }
-    }
-
-    // 3. profile gates
-    require(provider == "parquet", s"delta: format provider '$provider' outside the supported profile")
+    require(s.provider == "parquet", s"delta: format provider '${s.provider}' outside the supported profile")
+    val minReader = s.minReaderVersion
     require(minReader <= 3, s"delta: minReaderVersion $minReader outside the supported profile")
-    val gating = readerFeatures.filterNot(
-      Set("timestampNtz", "v2Checkpoint", "deletionVectors", "columnMapping").contains)
+    val gating = Option(s.protocol.get("readerFeatures")).toSeq.flatMap(_.elements().asScala.map(_.asText()))
+      .filterNot(Set("timestampNtz", "v2Checkpoint", "deletionVectors", "columnMapping").contains)
     require(minReader < 3 || gating.isEmpty,
       s"delta: reader features ${gating.mkString(",")} outside the supported profile")
-    require(Set("none", "name", "id").contains(
-        configuration.getOrElse("delta.columnMapping.mode", "none")),
-      s"delta: column mapping mode '${configuration("delta.columnMapping.mode")}' outside the supported profile")
-    require(live.nonEmpty, s"delta: table has no live data files")
-    require(schemaJson != null, s"delta: no metaData action found in the log")
-    DeltaState(live.values.toVector, schemaJson, partitionCols, configuration)
+    require(Set("none", "name", "id").contains(s.mappingMode),
+      s"delta: column mapping mode '${s.mappingMode}' outside the supported profile")
+    require(s.liveFiles.nonEmpty, s"delta: table has no live data files")
+    s
   }
 
   private def readImpl(spark: SparkSession, table: String, versionAsOf: Option[Long],
@@ -1129,16 +668,11 @@ object DeltaReader {
       schemaOnly: Boolean = false,
       changes: Option[Map[String, (Long, Long)]] = None): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = table.stripSuffix("/") + "/_delta_log"
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(new Path(logDir)), s"not a delta table (no _delta_log): $table")
-    val state = cachedState(spark, table, logDir, f, versionAsOf, maxLiveFiles)
-    val schemaJson = state.schemaJson
+    val f = DeltaLog.fs(spark, table)
+    val state = gated(DeltaLog.snapshot(spark, table, versionAsOf, maxLiveFiles))
     val partitionCols = state.partitionCols
-    val configuration = state.configuration
-    val mapped = configuration.getOrElse("delta.columnMapping.mode", "none") != "none"
-
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    val mapped = state.mappingMode != "none"
+    val schema = state.schema
     def resolve(p: String): String = {
       val decoded = PathKeys.percentDecode(p) // URL-encoded in the log; '+' stays literal
       if (decoded.contains("://") || decoded.startsWith("/")) decoded
@@ -1168,7 +702,7 @@ object DeltaReader {
     // sees no per-scan literals to constant-fold), then conservative
     // add.stats min/max ranges. The full filter re-applies to the
     // result below, so skipping is correctness-neutral by construction.
-    def pvOf(e: FileEntry, pc: String): Option[String] = {
+    def pvOf(e: DeltaLog.AddFile, pc: String): Option[String] = {
       val fl = schema(pc)
       e.partitionValues.get(physName(fl)).orElse(e.partitionValues.get(pc)).flatten
     }
@@ -1271,8 +805,8 @@ object DeltaReader {
         .withColumn("_commit_timestamp", lit(null).cast(org.apache.spark.sql.types.TimestampType)))
     }
     // changes read: restrict the scan to the window's surviving adds
-    var liveEntries: Seq[FileEntry] =
-      changes.fold(state.live: Seq[FileEntry])(m => state.live.filter(e => m.contains(e.path)))
+    var liveEntries: Seq[DeltaLog.AddFile] =
+      changes.fold(state.liveFiles: Seq[DeltaLog.AddFile])(m => state.liveFiles.filter(e => m.contains(e.path)))
     if (changes.isDefined && liveEntries.isEmpty) return emptyTyped()
     if (filterConjs.nonEmpty) {
       if (partitionCols.nonEmpty) {
@@ -1295,7 +829,7 @@ object DeltaReader {
         return emptyTyped()
     }
 
-    val hasDv = liveEntries.exists(_.dv.isDefined)
+    val hasDv = liveEntries.exists(_.hasDv)
     val needTag = hasDv || changes.isDefined
     import org.apache.spark.sql.functions.{expr, regexp_replace}
     def norm(c: Column): Column = PathKeys.scanKey(c)

@@ -1,8 +1,6 @@
 package graft.readers
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import java.net.URI
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Sink, Source}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
@@ -113,10 +111,7 @@ private[readers] class DeltaStreamSink(spark: SparkSession, table: String,
       // the first batch CREATES the table (an upsert into nothing is an
       // insert); after that the table's own layout governs and the
       // merge path publishes one commit per batch
-      val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-      val f = FileSystem.get(new URI(table).resolve("/"),
-        spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(logDir))
+      if (!DeltaLog.exists(spark, table))
         DeltaWriter.write(spark, frame, table, mode = "append",
           partitionBy = partitionColumns, txn = Some(appId -> batchId))
       else
@@ -201,27 +196,16 @@ private[readers] class DeltaStreamSource(spark: SparkSession, table: String,
     scala.collection.mutable.LongMap.empty[(Seq[(String, Long)], Boolean, Boolean)]
   private def versionMetaOf(v: Long): (Seq[(String, Long)], Boolean, Boolean) =
     versionMetaCache.getOrElseUpdate(v, {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val f = FileSystem.get(new URI(table).resolve("/"), conf)
-      val p = new Path(table.stripSuffix("/") + "/_delta_log", f"$v%020d.json")
-      require(f.exists(p),
+      val actions = DeltaLog.commitActions(spark, table, v).getOrElse(throw new IllegalArgumentException(
         s"graft-delta: commit json $v missing from _delta_log (expired/cleaned log) — " +
-          "cannot stream the window; re-baseline by restarting without a checkpoint")
-      val in = f.open(p)
-      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val mapper = new ObjectMapper()
-      val actions = text.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-        .map(mapper.readTree).toSeq
-      def dataChange(n: com.fasterxml.jackson.databind.JsonNode): Boolean =
-        Option(n.get("dataChange")).forall(x => x.isNull || x.asBoolean())
+          "cannot stream the window; re-baseline by restarting without a checkpoint"))
       val adds = actions.flatMap(a => Option(a.get("add")).filterNot(_.isNull))
-        .filter(dataChange)
+        .filter(DeltaLog.dataChange)
         .map(a => a.get("path").asText() ->
           Option(a.get("size")).filterNot(_.isNull).map(_.asLong()).getOrElse(0L))
         .distinctBy(_._1).sortBy(_._1)
       val hasRemoves = actions.flatMap(a => Option(a.get("remove")).filterNot(_.isNull))
-        .exists(dataChange)
+        .exists(DeltaLog.dataChange)
       val changesMeta = actions.exists(a => a.has("metaData") || a.has("protocol"))
       (adds, hasRemoves, changesMeta)
     })
@@ -319,10 +303,7 @@ private[readers] class DeltaStreamSource(spark: SparkSession, table: String,
           case None =>
             // initial snapshot serves as `insert` rows at the anchor
             // version (delta-spark's readChangeFeed stream seed)
-            val conf = spark.sparkContext.hadoopConfiguration
-            val f = FileSystem.get(new URI(table).resolve("/"), conf)
-            val cj = new Path(table.stripSuffix("/") + "/_delta_log", f"${endO._1}%020d.json")
-            val ts = scala.util.Try(f.getFileStatus(cj).getModificationTime)
+            val ts = DeltaLog.commitStatus(spark, table, endO._1).map(_.getModificationTime)
               .getOrElse(System.currentTimeMillis())
             DeltaReader.read(spark, table, versionAsOf = Some(endO._1))
               .withColumn("_change_type", lit("insert"))

@@ -1,6 +1,7 @@
 package graft.readers
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.readers.DeltaLog.{AddFile, Snapshot}
 import java.net.URI
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -13,16 +14,23 @@ import org.apache.spark.sql.types._
   * `graft-delta` streaming source) serves, with NO connector jar.
   *
   * Commit protocol: data files write to a staging directory (the
-  * ordinary distributed `df.write.parquet`, `partitionBy` respected),
-  * move into the table by rename, then ONE commit json is published
-  * with atomic create-no-overwrite — the same primitive delta-spark's
-  * HDFS LogStore uses. A concurrent writer winning the version race
-  * surfaces as FileAlreadyExists; appends (blind, conflict-free by
-  * construction) retry at the next version, overwrites RE-RESOLVE the
-  * live set they tombstone before retrying (their removes must name
-  * the winner's state, not the stale one). Object stores without
-  * atomic create (raw S3) are exactly where delta-spark requires a
-  * coordinating LogStore — this writer inherits the same caveat.
+  * ordinary distributed `df.write.parquet`, `partitionBy` respected)
+  * and move into the table by rename. The table state comes from
+  * [[DeltaLog]], the log module the reader shares: every operation's
+  * commit loop takes ONE head snapshot per attempt (cached, validated
+  * by the log-tail probe, read under `DeltaReader.DefaultMaxLiveFiles`)
+  * and publishes ONE commit json at its version + 1 through
+  * [[DeltaLog.publish]] — atomic create-no-overwrite, the primitive
+  * delta-spark's HDFS LogStore uses. A concurrent writer winning the
+  * version race surfaces as a failed create; the attempt re-runs
+  * against the new head, so appends (blind, conflict-free by
+  * construction) land at the next version, overwrites re-resolve the
+  * live set they tombstone, and row-level rewrites re-check their
+  * guards (their removes must name the winner's state, not the stale
+  * one). The writer's own replay gate: classic single-file checkpoints
+  * only (the kind it publishes). Object stores without atomic create
+  * (raw S3) are exactly where delta-spark requires a coordinating
+  * LogStore — this writer inherits the same caveat.
   *
   * Each add carries `partitionValues` (parsed from the staged
   * partition directories, Spark's own escaping decoded) and a `stats`
@@ -33,8 +41,8 @@ import org.apache.spark.sql.types._
   *
   * `txn` writes the app-level transaction action the streaming sink
   * uses for exactly-once: a commit carrying {"txn": {appId, version}}
-  * marks the batch; [[lastTxnVersion]] replays the log for the highest
-  * committed version of an appId, and the sink skips batches at or
+  * marks the batch; [[lastTxnVersion]] reads the last committed version
+  * of an appId from the head snapshot, and the sink skips batches at or
   * below it (idempotent addBatch under retries and restarts).
   *
   * Schema contract: writes against an existing table must match its
@@ -50,6 +58,80 @@ object DeltaWriter {
 
   private val mapper = new ObjectMapper()
   private def js(s: String): String = mapper.writeValueAsString(s)
+
+  // ---- the commit protocol ------------------------------------------
+
+  /** The head snapshot every operation starts from. The writer's own
+    * gate: it replays only classic single-file checkpoints (the kind it
+    * publishes) — a multipart/v2 one refuses. */
+  private def classicOnly(s: Snapshot): Snapshot = {
+    require(Set("none", "classic").contains(s.checkpointKind),
+      s"delta writer: checkpoint ${s.checkpointVersion} is not a classic single-file checkpoint — " +
+        "multipart/v2 checkpoints are outside this writer's replay profile; " +
+        "read/maintain the table with the delta-spark connector")
+    s
+  }
+  private def head(spark: SparkSession, table: String, version: Option[Long] = None): Snapshot =
+    classicOnly(DeltaLog.snapshot(spark, table, version))
+
+  /** The optimistic commit loop every operation shares: each attempt
+    * takes ONE snapshot (`take`; None before the first commit) and
+    * publishes `attempt`'s actions at its version + 1. A rival that
+    * took the version collides at the create and the attempt re-runs
+    * against the new head — so an attempt's guards always judge the
+    * state it commits over. `attempt` returning None commits nothing. */
+  private def commitLoop(spark: SparkSession, table: String, op: String, maxRetries: Int,
+      take: => Option[Snapshot])(attempt: Option[Snapshot] => Option[Seq[String]]): Unit = {
+    var tries = 0
+    var done = false
+    while (!done) {
+      val snap = take
+      attempt(snap) match {
+        case None => done = true
+        case Some(lines) =>
+          val ok = DeltaLog.publish(spark, table, snap.fold(0L)(_.version + 1), lines)
+          done = ok.isSuccess
+          if (!done) {
+            tries += 1
+            require(tries <= maxRetries,
+              s"delta $op: lost the commit race $maxRetries times at $table — giving up " +
+                s"(${ok.failed.get.getMessage})")
+          }
+      }
+    }
+  }
+  /** [[commitLoop]] over an existing table's head. */
+  private def commitOnHead(spark: SparkSession, table: String, op: String, maxRetries: Int)(
+      attempt: Snapshot => Option[Seq[String]]): Unit =
+    commitLoop(spark, table, op, maxRetries, Some(head(spark, table)))(s => attempt(s.get))
+
+  private def pvJson(pv: Map[String, Option[String]]): String =
+    pv.map { case (k, v) => s"${js(k)}:${v.fold("null")(js)}" }.mkString("{", ",", "}")
+  /** add.path is URL-encoded; the reader percent-decodes it back. */
+  private def encodePath(rel: String): String =
+    new URI(null, null, "/" + rel, null).getRawPath.stripPrefix("/")
+  private def addLine(path: String, pv: Map[String, Option[String]], size: Long, mtime: Long,
+      dataChange: Boolean, stats: Option[String], dv: Option[String] = None): String =
+    s"""{"add":{"path":${js(path)},"partitionValues":${pvJson(pv)},"size":$size,""" +
+      s""""modificationTime":$mtime,"dataChange":$dataChange""" +
+      dv.map(d => s""","deletionVector":$d""").getOrElse("") +
+      stats.map(st => s""","stats":${js(st)}""").getOrElse("") + "}}"
+  /** Removes carry partitionValues (delta-spark does the same): the
+    * change feed's delete derivation needs the tuple, since data files
+    * do not store partition columns. */
+  private def removeLine(path: String, pv: Map[String, Option[String]], dataChange: Boolean): String =
+    s"""{"remove":{"path":${js(path)},"deletionTimestamp":${System.currentTimeMillis()},""" +
+      s""""dataChange":$dataChange,"partitionValues":${pvJson(pv)}}}"""
+  private def commitInfo(operation: String, params: String = ""): String =
+    s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":${js(operation)}""" +
+      (if (params.isEmpty) "" else s""","operationParameters":$params""") + "}}"
+  /** The metaData action carrying `edit` of the head's own metaData. */
+  private def metaLine(head: Snapshot)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): String = {
+    val md = mapper.readTree(head.metaJson).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(md)
+    s"""{"metaData":$md}"""
+  }
 
   /** Write `df` into the Delta table at `table`.
     * mode: "append" | "overwrite" | "errorifexists" (create-only). */
@@ -79,11 +161,9 @@ object DeltaWriter {
     require(!(overwriteSchema && replaceWhere.isDefined),
       "delta writer: overwriteSchema cannot combine with replaceWhere (a partition-scoped " +
         "overwrite keeps rows the old schema wrote)")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
+    val f = DeltaLog.fs(spark, table)
     val tablePath = new Path(table)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val exists = f.exists(logDir)
+    val exists = DeltaLog.exists(spark, table)
     require(!(exists && mode == "errorifexists"),
       s"delta writer: table already exists at $table (mode errorifexists)")
     require(tableConf.isEmpty || !exists,
@@ -142,7 +222,7 @@ object DeltaWriter {
         dfIn.schema.fieldNames.exists(_.equalsIgnoreCase(n))).mkString(",")} " +
         "not in the frame")
     val existingHead =
-      if (exists && !overwriteSchema) Some(currentState(spark, table)) else None
+      if (overwriteSchema) None else DeltaLog.latest(spark, table).map(classicOnly)
 
     // Generated columns (delta.generationExpression — the table's
     // declaration, or the create-time param): an ABSENT generated
@@ -156,8 +236,7 @@ object DeltaWriter {
     }
     val df: DataFrame = {
       import org.apache.spark.sql.functions.{col, expr, lit}
-      val tblSchemaOpt = existingHead.map(h =>
-        DataType.fromJson(h.schemaJson).asInstanceOf[StructType])
+      val tblSchemaOpt = existingHead.map(_.schema)
       val genTypeOf: String => Option[DataType] = n =>
         tblSchemaOpt.flatMap(_.fields.find(_.name.equalsIgnoreCase(n)).map(_.dataType))
       val (absentGen, presentGen) = genExprs.partition { case (n, _) =>
@@ -213,7 +292,7 @@ object DeltaWriter {
       if (head.mappingMode != "none") {
         require(Set("name", "id").contains(head.mappingMode),
           s"delta writer: unknown column mapping mode '${head.mappingMode}' at $table")
-        val expected = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+        val expected = head.schema
         require((expected.fields ++ df.schema.fields).forall(fl => fl.dataType match {
           case _: StructType | _: ArrayType | _: MapType => false
           case _ => true
@@ -221,7 +300,7 @@ object DeltaWriter {
           "physical names are outside this writer's profile; write it with the " +
           "delta-spark connector")
       }
-      val expected = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      val expected = head.schema
       val got = df.schema
       if (mergeSchema) {
         val conflicts = got.fields.flatMap { b =>
@@ -319,12 +398,9 @@ object DeltaWriter {
     // pre-assigned ids can never collide with a racer's
     val mappedNewFields: Seq[StructField] = mappedHead match {
       case Some(head) if mergeSchema =>
-        val expected = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-        val confMaxId = scala.util.Try {
-          Option(mapper.readTree(head.metaJson).get("configuration"))
-            .flatMap(c => Option(c.get("delta.columnMapping.maxColumnId")))
-            .filterNot(_.isNull).map(_.asText().toLong)
-        }.toOption.flatten
+        val expected = head.schema
+        val confMaxId = head.configuration.get("delta.columnMapping.maxColumnId")
+          .flatMap(_.toLongOption)
         val fieldMaxId = expected.fields.flatMap(fl =>
           if (fl.metadata.contains("delta.columnMapping.id"))
             Some(fl.metadata.getLong("delta.columnMapping.id")) else None)
@@ -345,9 +421,7 @@ object DeltaWriter {
       case (None, None) => (df, partCols, df.schema, partCols)
       case (mh, cm) =>
         val allMapped: Seq[StructField] = mh match {
-          case Some(head) =>
-            DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-              .fields.toSeq ++ mappedNewFields
+          case Some(head) => head.schema.fields.toSeq ++ mappedNewFields
           case None => cm.get
         }
         def physOf(fl: StructField): (String, Option[Long]) = (
@@ -391,22 +465,21 @@ object DeltaWriter {
         AddSpec(rel, partitionValues(rel), destSt.getLen, destSt.getModificationTime,
           statsJson(f, dest, statsSchema, statsPartCols))
       }
-      // 3. publish the commit, optimistic-concurrency loop
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val version = if (!f.exists(logDir)) 0L
-          else scala.util.Try(DeltaReader.currentVersion(spark, table) + 1L).getOrElse(0L)
+      // 3. publish the commit, optimistic-concurrency loop: each attempt
+      // takes one snapshot (none before the first commit) and commits at
+      // its version + 1
+      commitLoop(spark, table, "writer", maxRetries,
+          DeltaLog.latest(spark, table).map(classicOnly)) { snap =>
+        val version = snap.fold(0L)(_.version + 1L)
         // a mapped CREATE that lost its race cannot degrade to an
         // append: the staged files carry THIS create's physical names/
         // ids, which can never bind to a rival's mapping
         require(createMappedFields.isEmpty || version == 0L,
           s"delta writer: a table appeared at $table under this mapped CREATE — the " +
             "staged files' physical names cannot bind to the rival's mapping; re-run")
-        // ONE head replay per attempt, shared by the metaData branches
-        // and the overwrite tombstones (each must see the post-race
-        // state, none should pay the log walk twice)
-        lazy val headNow: HeadState = currentState(spark, table)
+        // the attempt's snapshot serves the metaData branches and the
+        // overwrite tombstones alike: each sees the post-race state
+        lazy val headNow: Snapshot = snap.get
         if (version > 0L && !overwriteSchema) {
           // the up-front schema/partitioning validation ran against the
           // PRE-race head; a rival overwriteSchema can replace both
@@ -430,7 +503,7 @@ object DeltaWriter {
                 "carry); re-run against the new mapping")
           }
           if (!mergeSchema) {
-            val expectedNow = DataType.fromJson(headNow.schemaJson).asInstanceOf[StructType]
+            val expectedNow = headNow.schema
             val same = expectedNow.fields.length == df.schema.fields.length &&
               expectedNow.fields.zip(df.schema.fields).forall { case (a, b) =>
                 a.name.equalsIgnoreCase(b.name) && a.dataType == b.dataType
@@ -505,11 +578,7 @@ object DeltaWriter {
           // table refuses: its configuration demands physicalName/id
           // field metadata this plain schemaString cannot supply, and
           // carrying the mode over would break every compliant reader
-          val mdNode = mapper.readTree(headNow.metaJson)
-            .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          val mappingMode = Option(mdNode.get("configuration"))
-            .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-            .filterNot(_.isNull).map(_.asText()).getOrElse("none")
+          val mappingMode = headNow.mappingMode
           require(mappingMode == "none",
             s"delta writer: overwriteSchema on a column-mapped table (mode $mappingMode) — " +
               "the replacement schema would lack the mapping metadata the mode requires; " +
@@ -525,18 +594,18 @@ object DeltaWriter {
               "(they would survive referencing columns the new schema may drop)")
           // nullable like CREATE: the frame's incidental nullability
           // must not become a constraint
-          mdNode.put("schemaString", StructType(
-            df.schema.fields.map(_.copy(nullable = true))).json)
-          val pcArr = mdNode.putArray("partitionColumns")
-          partCols.foreach(pcArr.add)
-          actions += s"""{"metaData":${mdNode.toString}}"""
+          actions += metaLine(headNow) { md =>
+            md.put("schemaString", StructType(df.schema.fields.map(_.copy(nullable = true))).json)
+            val pcArr = md.putArray("partitionColumns")
+            partCols.foreach(pcArr.add)
+          }
         } else if (mergeSchema) {
           // schema evolution rides THIS commit as a metaData action with
           // the merged schema (table order first, frame-only columns
           // appended nullable); id/configuration/createdTime carry over
           // from the head's own metaData. Re-resolved per attempt so a
           // rival evolution landing first merges against ITS result.
-          val expected = DataType.fromJson(headNow.schemaJson).asInstanceOf[StructType]
+          val expected = headNow.schema
           // the up-front conflict check ran against the PRE-race head;
           // a rival evolution may have landed a same-named column of a
           // different type since — the staged files would then violate
@@ -561,68 +630,36 @@ object DeltaWriter {
               if (mappedNewFields.nonEmpty) mappedNewFields
               else newFields.toSeq.map(_.copy(nullable = true))
             val merged = StructType(expected.fields ++ mergedTail)
-            val mdNode = mapper.readTree(headNow.metaJson)
-              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-            mdNode.put("schemaString", merged.json)
-            if (mappedNewFields.nonEmpty) {
-              val confNode = mdNode.withObject("/configuration")
-              val newMax = mappedNewFields
-                .map(_.metadata.getLong("delta.columnMapping.id")).max
-              confNode.put("delta.columnMapping.maxColumnId", newMax.toString)
+            actions += metaLine(headNow) { md =>
+              md.put("schemaString", merged.json)
+              if (mappedNewFields.nonEmpty) {
+                val newMax = mappedNewFields
+                  .map(_.metadata.getLong("delta.columnMapping.id")).max
+                md.withObject("/configuration").put("delta.columnMapping.maxColumnId", newMax.toString)
+              }
             }
-            actions += s"""{"metaData":${mdNode.toString}}"""
           }
         }
         txn.foreach { case (appId, v) =>
           actions += s"""{"txn":{"appId":${js(appId)},"version":$v}}"""
         }
-        actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-          s""""operation":${js(if (mode == "overwrite" && version > 0) "WRITE.Overwrite" else "WRITE")}}}"""
+        actions += commitInfo(if (mode == "overwrite" && version > 0) "WRITE.Overwrite" else "WRITE")
         if (mode == "overwrite" && version > 0) {
           // tombstone the CURRENT live set — re-resolved on every retry,
           // so a lost race never removes against a stale state; under
           // replaceWhere only files whose partition tuple MATCHES the
           // predicate (exact driver-local evaluation) are replaced
-          val doomed: Seq[LiveFile] = replaceWhere match {
+          val doomed: Seq[AddFile] = replaceWhere match {
             case None => headNow.liveFiles
             case Some(rw) =>
               val matching = matchingFiles(spark, headNow, rw).toSet
               headNow.liveFiles.filter(lf => matching.contains(lf.path))
           }
-          // removes carry partitionValues (delta-spark does the same):
-          // the change-feed's delete derivation needs the tuple, since
-          // data files do not store partition columns
-          doomed.foreach { e =>
-            val pv = e.partitionValues.map { case (k, v) =>
-              s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-            actions += s"""{"remove":{"path":${js(e.path)},"deletionTimestamp":${System.currentTimeMillis()},""" +
-              s""""dataChange":true,"partitionValues":$pv}}"""
-          }
+          doomed.foreach(e => actions += removeLine(e.path, e.partitionValues, dataChange = true))
         }
-        adds.foreach { a =>
-          val pv = a.partitionValues.map { case (k, v) =>
-            s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-          // protocol: add.path is URL-encoded; the reader percent-
-          // decodes it back to the on-disk relative name
-          val encoded = new URI(null, null, "/" + a.path, null).getRawPath.stripPrefix("/")
-          actions += s"""{"add":{"path":${js(encoded)},"partitionValues":$pv,"size":${a.size},""" +
-            s""""modificationTime":${a.mtime},"dataChange":true""" +
-            a.stats.map(st => s""","stats":${js(st)}""").getOrElse("") + "}}"
-        }
-        val commitPath = new Path(logDir, f"$version%020d.json")
-        f.mkdirs(logDir)
-        val ok = scala.util.Try {
-          val out = f.create(commitPath, /* overwrite = */ false)
-          try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-        }
-        if (ok.isSuccess) committed = true
-        else {
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"delta writer: lost the commit race $maxRetries times at $table — " +
-              s"giving up (${ok.failed.get.getMessage})")
-        }
+        adds.foreach(a => actions +=
+          addLine(encodePath(a.path), a.partitionValues, a.size, a.mtime, dataChange = true, a.stats))
+        Some(actions.result())
       }
     } finally scala.util.Try(f.delete(staging, true))
   }
@@ -649,12 +686,9 @@ object DeltaWriter {
   def compact(spark: SparkSession, table: String, maxRetries: Int = 10,
       where: Option[String] = None, targetFileBytes: Long = 1L << 30): Int = {
     require(targetFileBytes >= 1, s"delta compact: targetFileBytes must be >= 1")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
+    val f = DeltaLog.fs(spark, table)
     val tablePath = new Path(table)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val head = currentState(spark, table)
+    val head = this.head(spark, table)
     // merge-on-read tables compact THROUGH their vectors: the group
     // scan masks deleted rows (dropping them from the rewrite), so
     // OPTIMIZE doubles as a vector purge — a lone DV'd file is a
@@ -662,15 +696,12 @@ object DeltaWriter {
     val dvTable = head.dvEnabled && head.mappingMode == "none"
     if (!dvTable) requireRewritable(head, table, "compact", allowMapped = true)
     val byPath = head.liveFiles.map(lf => lf.path -> lf).toMap
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     // mapped tables compact entirely in PHYSICAL terms: the group scan
     // reads physical names, the rewrite stages them back with field
     // ids, stats stay physical — no logical round trip is needed since
     // compaction never looks at a value
-    val physOf: Map[String, String] = schema.fields.map { fl =>
-      fl.name -> (if (fl.metadata.contains("delta.columnMapping.physicalName"))
-        fl.metadata.getString("delta.columnMapping.physicalName") else fl.name)
-    }.toMap
+    val physOf = head.physicalNames
     val mappedT = head.mappingMode != "none"
     val dataSchema = StructType(schema.fields
       .filterNot(fl => head.partitionCols.contains(fl.name))
@@ -772,14 +803,7 @@ object DeltaWriter {
               schema.fieldNames.find(_.equalsIgnoreCase(pc)).getOrElse(pc), pc))
             else head.partitionCols)))
       }
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        // version FIRST, state SECOND (see rewriteCommit): a rival
-        // landing between the two either shows in nowLive or collides
-        // at the create — never escapes both
-        val version = DeltaReader.currentVersion(spark, table) + 1L
-        val nowState = currentState(spark, table)
+      commitOnHead(spark, table, "compact", maxRetries) { nowState =>
         val nowLive = nowState.live.toSet
         val gone = adds.flatMap(_._1).filterNot(nowLive.contains)
         require(gone.isEmpty,
@@ -792,33 +816,12 @@ object DeltaWriter {
           require(nowBy.get(p).forall(_.dvJson == byPath(p).dvJson),
             s"delta compact: the deletion vector of $p changed under this rewrite; re-run")
         }
-        val actions = Seq.newBuilder[String]
-        actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"OPTIMIZE"}}"""
-        adds.foreach { case (oldPaths, a) =>
-          val pv = a.partitionValues.map { case (k, v) =>
-            s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
+        Some(commitInfo("OPTIMIZE") +: adds.flatMap { case (oldPaths, a) =>
           // compaction rewrites stay within one partition group, so the
           // rewritten add's tuple IS each removed file's tuple
-          oldPaths.foreach(p =>
-            actions += s"""{"remove":{"path":${js(p)},"deletionTimestamp":${System.currentTimeMillis()},""" +
-              s""""dataChange":false,"partitionValues":$pv}}""")
-          val encoded = new URI(null, null, "/" + a.path, null).getRawPath.stripPrefix("/")
-          actions += s"""{"add":{"path":${js(encoded)},"partitionValues":$pv,"size":${a.size},""" +
-            s""""modificationTime":${a.mtime},"dataChange":false""" +
-            a.stats.map(st => s""","stats":${js(st)}""").getOrElse("") + "}}"
-        }
-        val commitPath = new Path(logDir, f"$version%020d.json")
-        val ok = scala.util.Try {
-          val out = f.create(commitPath, false)
-          try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-        }
-        if (ok.isSuccess) committed = true
-        else {
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"delta compact: lost the commit race $maxRetries times at $table")
-        }
+          oldPaths.map(p => removeLine(p, a.partitionValues, dataChange = false)) :+
+            addLine(encodePath(a.path), a.partitionValues, a.size, a.mtime, dataChange = false, a.stats)
+        })
       }
       adds.map(_._1.size).sum
     } finally scala.util.Try(f.delete(staging, true))
@@ -851,14 +854,11 @@ object DeltaWriter {
       maxRetries: Int = 10): Int = {
     import org.apache.spark.sql.functions._
     ZOrder.validate(zCols, ranks, targetFileBytes, "delta zorder")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val head = currentState(spark, table)
+    val f = DeltaLog.fs(spark, table)
+    val head = this.head(spark, table)
     val dvTable = head.dvEnabled && head.mappingMode == "none"
     if (!dvTable) requireRewritable(head, table, "zorder", allowMapped = true)
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     val names = zCols.map { c =>
       val fl = schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -887,101 +887,26 @@ object DeltaWriter {
   }
 
   /** Write a classic checkpoint at the table's current version: one
-    * parquet file holding the protocol + metaData + live add actions,
-    * plus the `_last_checkpoint` pointer — after which commit jsons at
-    * or below the checkpoint version may be aged out of the log (time
-    * travel to them breaks, the documented trade) and replay cost
-    * stops growing with table history. The action JSONs collected from
-    * the replay round-trip through `spark.read.json` → parquet, the
-    * exact struct-column layout the reader's checkpoint path consumes.
-    * Returns the checkpointed version. */
+    * parquet file holding the head snapshot's protocol, metaData, txn
+    * and live add actions (each add as logged), plus the
+    * `_last_checkpoint` pointer — after which commit jsons at or below
+    * the checkpoint version may be aged out of the log (time travel to
+    * them breaks, the documented trade) and replay cost stops growing
+    * with table history. App transactions persist through checkpoints
+    * (per the protocol), or the sink's exactly-once probe would forget
+    * committed batches once the jsons age out. Returns the
+    * checkpointed version. */
   def checkpoint(spark: SparkSession, table: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val (cpV, cpLines) = checkpointLines(spark, f, logDir)
-    val commits = f.listStatus(logDir).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .sortBy(_.getPath.getName.stripSuffix(".json").toLong)
-      .filter(_.getPath.getName.stripSuffix(".json").toLong > cpV)
-    require(cpV >= 0 || commits.nonEmpty, s"delta writer: nothing to checkpoint at $table")
-    val version = commits.lastOption
-      .map(_.getPath.getName.stripSuffix(".json").toLong).getOrElse(cpV)
-    // replay keeping the last RAW action line per concern — the
-    // checkpoint must reproduce the actions verbatim (stats,
-    // partitionValues, dv descriptors all ride along untouched);
-    // an existing checkpoint seeds the state
-    var protocolLine: String = """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-    var metaLine: String = null
-    val liveAdds = scala.collection.mutable.LinkedHashMap[String, String]()
-    // app transactions persist through checkpoints (per the protocol),
-    // or the sink's exactly-once probe would forget committed batches
-    // once the jsons age out
-    val txns = scala.collection.mutable.LinkedHashMap[String, String]()
-    def applyLine(line: String): Unit = {
-      val a = mapper.readTree(line)
-      if (a.hasNonNull("protocol")) protocolLine = line
-      if (a.hasNonNull("metaData")) metaLine = line
-      Option(a.get("txn")).filterNot(_.isNull)
-        .foreach(t => txns(t.get("appId").asText()) = line)
-      Option(a.get("add")).filterNot(_.isNull)
-        .foreach(ad => liveAdds(ad.get("path").asText()) = line)
-      Option(a.get("remove")).filterNot(_.isNull)
-        .foreach(rm => liveAdds -= rm.get("path").asText())
-    }
-    cpLines.foreach(applyLine)
-    commits.foreach { st =>
-      val in = f.open(st.getPath)
-      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach(applyLine)
-    }
-    require(metaLine != null, s"delta writer: no metaData action in $table")
-    val lines = Seq(protocolLine, metaLine) ++ txns.values ++ liveAdds.values
-    import spark.implicits._
-    val staged = new Path(table.stripSuffix("/") + s"/_staging_cp_${java.util.UUID.randomUUID()}")
-    try {
-      spark.read.json(lines.toDS()).coalesce(1).write.mode("overwrite").parquet(staged.toString)
-      val part = listParquet(f, staged).head
-      val cpPath = new Path(logDir, f"$version%020d.checkpoint.parquet")
-      require(f.rename(part.getPath, cpPath) || f.exists(cpPath),
-        s"delta writer: publishing checkpoint $cpPath failed")
-      val lc = f.create(new Path(logDir, "_last_checkpoint"), true)
-      try lc.write(s"""{"version":$version,"size":${lines.size}}""".getBytes(StandardCharsets.UTF_8))
-      finally lc.close()
-      version
-    } finally scala.util.Try(f.delete(staged, true))
+    val snap = head(spark, table)
+    DeltaLog.writeCheckpoint(spark, table, snap)
+    snap.version
   }
 
   /** Highest txn version committed for `appId`, or -1 — the streaming
-    * sink's idempotence probe. Seeds from the checkpoint's persisted
-    * txn rows, then walks the remaining commit jsons, so batch ids
-    * stay remembered across checkpoint + log cleanup. */
-  def lastTxnVersion(spark: SparkSession, table: String, appId: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    if (!f.exists(logDir)) return -1L
-    var last = -1L
-    def applyLine(line: String): Unit = {
-      val a = mapper.readTree(line)
-      Option(a.get("txn")).filterNot(_.isNull).foreach { t =>
-        if (t.get("appId").asText() == appId) last = math.max(last, t.get("version").asLong())
-      }
-    }
-    val (cpV, cpLines) = checkpointLines(spark, f, logDir)
-    cpLines.foreach(applyLine)
-    f.listStatus(logDir).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .filter(_.getPath.getName.stripSuffix(".json").toLong > cpV)
-      .sortBy(_.getPath.getName)
-      .foreach { st =>
-        val in = f.open(st.getPath)
-        val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-        text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach(applyLine)
-      }
-    last
-  }
+    * sink's idempotence probe, read from the head snapshot (which keeps
+    * the last txn per appId through checkpoints and log cleanup). */
+  def lastTxnVersion(spark: SparkSession, table: String, appId: String): Long =
+    DeltaLog.latest(spark, table).map(classicOnly).fold(-1L)(_.txnVersion(appId))
 
   /** DELETE WHERE with DATA-COLUMN predicates — copy-on-write per
     * touched file, the delta-spark `DeltaTable.delete` surface (the
@@ -1006,11 +931,8 @@ object DeltaWriter {
   def deleteWhere(spark: SparkSession, table: String, predicate: String,
       maxRetries: Int = 10): Long = {
     import org.apache.spark.sql.functions.{col, collect_set, count, expr, lit}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val head = currentState(spark, table)
+    val f = DeltaLog.fs(spark, table)
+    val head = this.head(spark, table)
     requireNotAppendOnly(head, table, "delete")
     // the same analyzable-conjunct profile as replaceWhere: a
     // nondeterministic predicate would match DIFFERENT rows in the
@@ -1035,7 +957,7 @@ object DeltaWriter {
     // full predicate, so skipping is correctness-neutral — but a
     // partition-scoped delete on a 100 TB table now opens only its own
     // partition's footers instead of every live file's.
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     val candidates = pruneLiveFiles(spark, head, schema, head.liveFiles, conjs)
     if (candidates.isEmpty) return 0L
     // merge-on-read: a DV-enabled table commits deletion vectors for
@@ -1094,18 +1016,9 @@ object DeltaWriter {
     * scan key — detection exclusions, vector unions and masked rewrite
     * scans all start here. */
   private def existingDvs(spark: SparkSession, f: FileSystem, table: String,
-      files: Seq[LiveFile]): Map[String, Array[Long]] = {
+      files: Seq[AddFile]): Map[String, Array[Long]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    files.flatMap { lf =>
-      lf.dvJson.map { dj =>
-        val d = mapper.readTree(dj)
-        val desc = DeltaReader.DvDescriptor(d.get("storageType").asText(),
-          d.get("pathOrInlineDv").asText(),
-          Option(d.get("offset")).filterNot(_.isNull).map(_.asInt()).getOrElse(0),
-          d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
-        liveKey(f, table, lf) -> DeltaReader.dvRows(table, desc, conf)
-      }
-    }.toMap
+    files.flatMap(lf => lf.dv.map(d => liveKey(f, table, lf) -> DeltaReader.dvRows(table, d, conf))).toMap
   }
 
   /** [[scanLive]] with the rows existing deletion vectors delete
@@ -1113,7 +1026,7 @@ object DeltaWriter {
     * every rewrite consumer must see on a merge-on-read table. A clean
     * file set pays nothing. */
   private def scanLiveVisible(spark: SparkSession, f: FileSystem, table: String,
-      head: HeadState, files: Seq[LiveFile], keepRowIdx: Boolean = false): DataFrame = {
+      head: Snapshot, files: Seq[AddFile], keepRowIdx: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val ex = existingDvs(spark, f, table, files.filter(_.hasDv))
     if (ex.isEmpty) scanLive(spark, f, table, head, files, withRowIndex = keepRowIdx)
@@ -1131,8 +1044,8 @@ object DeltaWriter {
   }
 
   private def deleteWhereDv(spark: SparkSession, f: FileSystem, table: String,
-      head: HeadState, schema: StructType, predicate: String,
-      candidates: Seq[LiveFile], maxRetries: Int): Long = {
+      head: Snapshot, schema: StructType, predicate: String,
+      candidates: Seq[AddFile], maxRetries: Int): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, expr, lit}
     val byKey = candidates.map(lf => liveKey(f, table, lf) -> lf).toMap
     val existing = existingDvs(spark, f, table, candidates.filter(_.hasDv))
@@ -1163,7 +1076,7 @@ object DeltaWriter {
     if (overThreshold)
       return deleteWhereMaskedRewrite(spark, f, table, head, predicate,
         candidates, maxRetries)
-    val dvRewrites: Seq[(LiveFile, String)] = newPerFile.toSeq.map { case (k, fresh) =>
+    val dvRewrites: Seq[(AddFile, String)] = newPerFile.toSeq.map { case (k, fresh) =>
       byKey(k) -> dvDescriptorJson((existing.getOrElse(k, Array.empty[Long]) ++ fresh).sorted)
     }
     val cdc =
@@ -1190,10 +1103,10 @@ object DeltaWriter {
     * vector. Touched files rewrite WITHOUT vectors (their masked rows
     * drop with the matched ones); untouched files keep theirs. */
   private def deleteWhereMaskedRewrite(spark: SparkSession, f: FileSystem, table: String,
-      head: HeadState, predicate: String, candidates: Seq[LiveFile],
+      head: Snapshot, predicate: String, candidates: Seq[AddFile],
       maxRetries: Int): Long = {
     import org.apache.spark.sql.functions.{col, collect_set, count, expr, lit}
-    def masked(files: Seq[LiveFile]): DataFrame =
+    def masked(files: Seq[AddFile]): DataFrame =
       scanLiveVisible(spark, f, table, head, files)
     val agg = masked(candidates).where(expr(predicate))
       .agg(count(lit(1)).as("n"), collect_set(col(FileCol)).as("files")).collect()(0)
@@ -1228,9 +1141,10 @@ object DeltaWriter {
     * so the operation is O(live files) driver work however large the
     * table. Refusals: a file to resurrect whose bytes were vacuumed
     * (restoring would publish dangling adds — delta-spark surfaces the
-    * same break), any involved file carrying a deletion vector (the
-    * replay keeps only a flag, not the descriptor), a version the
-    * cleaned log can no longer reconstruct.
+    * same break), any involved file carrying a deletion vector
+    * (re-emitting vectored adds across a history fork is outside this
+    * writer's profile), a version the cleaned log can no longer
+    * reconstruct.
     *
     * Streams: a restore that drops files is a data-removing version
     * and a metaData re-declaration is a metadata change — the
@@ -1240,17 +1154,12 @@ object DeltaWriter {
     * (dataChange=true). Returns (files removed, files resurrected). */
   def restore(spark: SparkSession, table: String, version: Long,
       maxRetries: Int = 10): (Int, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val target = stateAt(spark, table, Some(version))
-    var attempt = 0
-    while (true) {
-      val curV = DeltaReader.currentVersion(spark, table)
-      require(version <= curV,
-        s"delta restore: version $version is beyond the head of $table ($curV)")
-      val head = currentState(spark, table)
+    val f = DeltaLog.fs(spark, table)
+    val target = head(spark, table, Some(version))
+    var counts = (0, 0)
+    commitOnHead(spark, table, "restore", maxRetries) { head =>
+      require(version <= head.version,
+        s"delta restore: version $version is beyond the head of $table (${head.version})")
       requireNotAppendOnly(head, table, "restore")
       val tgtByPath = target.liveFiles.map(lf => lf.path -> lf).toMap
       val nowByPath = head.liveFiles.map(lf => lf.path -> lf).toMap
@@ -1259,52 +1168,29 @@ object DeltaWriter {
       val dvInvolved = (removes ++ adds).count(_.hasDv)
       require(dvInvolved == 0,
         s"delta restore: $dvInvolved file(s) crossing the restore carry deletion " +
-          "vectors — the replay keeps only a flag, not the descriptor a re-emitted " +
-          "add/remove needs; run it with the delta-spark connector")
+          "vectors — re-emitting vectored adds across a restore is outside this " +
+          "writer's profile; run it with the delta-spark connector")
       val missing = adds.map(a => resolveLogPath(table, a.path))
         .filterNot(p => f.exists(new Path(p)))
       require(missing.isEmpty,
         s"delta restore: file(s) ${missing.take(3).mkString(", ")} referenced by " +
           s"version $version were vacuumed — that version is no longer restorable")
       val metaChanged = head.schemaJson != target.schemaJson ||
-        head.partitionCols != target.partitionCols ||
-        Option(head.metaJson).map(_.toString) != Option(target.metaJson).map(_.toString)
-      if (removes.isEmpty && adds.isEmpty && !metaChanged) return (0, 0) // already there
-      val actions = Seq.newBuilder[String]
-      actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-        s""""operation":"RESTORE","operationParameters":{"version":"$version"}}}"""
-      if (metaChanged) actions += s"""{"metaData":${target.metaJson}}"""
-      removes.foreach { e =>
-        val pv = e.partitionValues.map { case (k, v) =>
-          s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-        actions += s"""{"remove":{"path":${js(e.path)},""" +
-          s""""deletionTimestamp":${System.currentTimeMillis()},""" +
-          s""""dataChange":true,"partitionValues":$pv}}"""
-      }
-      adds.foreach { a =>
-        // log paths re-emit VERBATIM (already log-encoded); size/mtime
-        // re-read from the still-present bytes just verified above
-        val st = f.getFileStatus(new Path(resolveLogPath(table, a.path)))
-        val pv = a.partitionValues.map { case (k, v) =>
-          s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-        actions += s"""{"add":{"path":${js(a.path)},"partitionValues":$pv,""" +
-          s""""size":${st.getLen},"modificationTime":${st.getModificationTime},""" +
-          s""""dataChange":true""" +
-          a.stats.map(s0 => s""","stats":${js(s0)}""").getOrElse("") + "}}"
-      }
-      val commitPath = new Path(logDir, f"${curV + 1}%020d.json")
-      val ok = scala.util.Try {
-        val out = f.create(commitPath, false)
-        try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      if (ok.isSuccess) return (removes.size, adds.size)
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta restore: lost the commit race $maxRetries times at $table — giving up " +
-          s"(${ok.failed.get.getMessage})")
+        head.partitionCols != target.partitionCols || head.metaJson != target.metaJson
+      counts = (removes.size, adds.size)
+      if (removes.isEmpty && adds.isEmpty && !metaChanged) None // already there
+      else Some(Seq(commitInfo("RESTORE", s"""{"version":"$version"}""")) ++
+        (if (metaChanged) Seq(s"""{"metaData":${target.metaJson}}""") else Nil) ++
+        removes.map(e => removeLine(e.path, e.partitionValues, dataChange = true)) ++
+        adds.map { a =>
+          // log paths re-emit VERBATIM (already log-encoded); size/mtime
+          // re-read from the still-present bytes just verified above
+          val st = f.getFileStatus(new Path(resolveLogPath(table, a.path)))
+          addLine(a.path, a.partitionValues, st.getLen, st.getModificationTime,
+            dataChange = true, a.stats)
+        })
     }
-    throw new IllegalStateException("unreachable")
+    counts
   }
 
   /** RENAME COLUMN — METADATA-ONLY on a column-mapped table (the whole
@@ -1322,20 +1208,14 @@ object DeltaWriter {
     * metadata change by their existing rule (restart to adopt). */
   def renameColumn(spark: SparkSession, table: String, from: String, to: String,
       maxRetries: Int = 10): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
     require(to.nonEmpty && !to.exists(c => "[ ,;{}()\n\t=]".contains(c)),
       s"delta rename: invalid column name '$to'")
-    var attempt = 0
-    while (true) {
-      val head = currentState(spark, table)
+    commitOnHead(spark, table, "rename", maxRetries) { head =>
       require(head.mappingMode != "none",
         s"delta rename: $table is not column-mapped — its data files key columns by " +
           "the logical name, so a rename needs a full rewrite; enable column mapping " +
           "(delta-spark: delta.columnMapping.mode=name) or rewrite with the connector")
-      val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      val schema = head.schema
       val idx = schema.fields.indexWhere(_.name.equalsIgnoreCase(from))
       require(idx >= 0, s"delta rename: column '$from' does not exist at $table " +
         s"(have ${schema.fieldNames.mkString(", ")})")
@@ -1345,31 +1225,14 @@ object DeltaWriter {
       val renamed = StructType(schema.fields.zipWithIndex.map { case (fl, i) =>
         if (i == idx) fl.copy(name = to) else fl
       })
-      val mdNode = mapper.readTree(head.metaJson)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      mdNode.put("schemaString", renamed.json)
-      if (head.partitionCols.exists(_.equalsIgnoreCase(from))) {
-        val pcArr = mdNode.putArray("partitionColumns")
-        head.partitionCols.foreach(pc =>
-          pcArr.add(if (pc.equalsIgnoreCase(from)) to else pc))
-      }
-      val actions = Seq(
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-          s""""operation":"RENAME COLUMN","operationParameters":""" +
-          s"""{"from":${js(from)},"to":${js(to)}}}}""",
-        s"""{"metaData":${mdNode.toString}}""")
-      val curV = DeltaReader.currentVersion(spark, table)
-      val commitPath = new Path(logDir, f"${curV + 1}%020d.json")
-      val ok = scala.util.Try {
-        val out = f.create(commitPath, false)
-        try out.write((actions.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      if (ok.isSuccess) return
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta rename: lost the commit race $maxRetries times at $table — giving up " +
-          s"(${ok.failed.get.getMessage})")
+      Some(Seq(commitInfo("RENAME COLUMN", s"""{"from":${js(from)},"to":${js(to)}}"""),
+        metaLine(head) { md =>
+          md.put("schemaString", renamed.json)
+          if (head.partitionCols.exists(_.equalsIgnoreCase(from))) {
+            val pcArr = md.putArray("partitionColumns")
+            head.partitionCols.foreach(pc => pcArr.add(if (pc.equalsIgnoreCase(from)) to else pc))
+          }
+        }))
     }
   }
 
@@ -1382,19 +1245,13 @@ object DeltaWriter {
     * depends on them); dropping the last column refuses. */
   def dropColumn(spark: SparkSession, table: String, name: String,
       maxRetries: Int = 10): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    var attempt = 0
-    while (true) {
-      val head = currentState(spark, table)
+    commitOnHead(spark, table, "drop", maxRetries) { head =>
       require(head.mappingMode != "none",
         s"delta drop: $table is not column-mapped — its data files carry the column " +
           "under its logical name, so a drop needs a full rewrite; enable column " +
           "mapping (delta-spark: delta.columnMapping.mode=name) or rewrite with the " +
           "connector")
-      val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      val schema = head.schema
       require(schema.fields.exists(_.name.equalsIgnoreCase(name)),
         s"delta drop: column '$name' does not exist at $table " +
           s"(have ${schema.fieldNames.mkString(", ")})")
@@ -1403,26 +1260,8 @@ object DeltaWriter {
           "on it; repartition with overwriteSchema instead")
       val remaining = schema.fields.filterNot(_.name.equalsIgnoreCase(name))
       require(remaining.nonEmpty, s"delta drop: cannot drop the last column of $table")
-      val mdNode = mapper.readTree(head.metaJson)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      mdNode.put("schemaString", StructType(remaining).json)
-      val actions = Seq(
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-          s""""operation":"DROP COLUMNS","operationParameters":""" +
-          s"""{"columns":${js(name)}}}}""",
-        s"""{"metaData":${mdNode.toString}}""")
-      val curV = DeltaReader.currentVersion(spark, table)
-      val commitPath = new Path(logDir, f"${curV + 1}%020d.json")
-      val ok = scala.util.Try {
-        val out = f.create(commitPath, false)
-        try out.write((actions.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      if (ok.isSuccess) return
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta drop: lost the commit race $maxRetries times at $table — giving up " +
-          s"(${ok.failed.get.getMessage})")
+      Some(Seq(commitInfo("DROP COLUMNS", s"""{"columns":${js(name)}}"""),
+        metaLine(head)(_.put("schemaString", StructType(remaining).json))))
     }
   }
 
@@ -1475,11 +1314,8 @@ object DeltaWriter {
       txn: Option[(String, Long)] = None, maxRetries: Int = 10): Unit = {
     import org.apache.spark.sql.functions.{col, collect_set, expr, lit}
     require(on.nonEmpty, "delta merge: at least one key column required")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val head = currentState(spark, table)
+    val f = DeltaLog.fs(spark, table)
+    val head = this.head(spark, table)
     // an insert-only merge appends; any matched/bySource clause
     // rewrites committed rows and the append-only declaration refuses
     if (clauses.exists(_.kind != "notMatched"))
@@ -1491,7 +1327,7 @@ object DeltaWriter {
     // tables / column mapping still refuse.
     val dvTable = head.dvEnabled && head.mappingMode == "none"
     if (!dvTable) requireRewritable(head, table, "merge", allowMapped = true)
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     MergeClauses.validate(clauses, schema, "delta")
     val onT: Seq[String] = on.map(k =>
       schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(throw new IllegalArgumentException(
@@ -1685,7 +1521,7 @@ object DeltaWriter {
     else table.stripSuffix("/") + "/" + decoded
   }
 
-  private def liveKey(f: FileSystem, table: String, lf: LiveFile): String =
+  private def liveKey(f: FileSystem, table: String, lf: AddFile): String =
     PathKeys.driverKey(resolveLogPath(table, lf.path), f)
 
   /** Pre-prune the DETECTION candidates of a row-level rewrite with
@@ -1700,25 +1536,22 @@ object DeltaWriter {
     * partition column absent from the schema (a malformed log this
     * writer didn't produce) skips partition pruning rather than
     * throwing — pruning is an optimization. */
-  private def pruneLiveFiles(spark: SparkSession, head: HeadState, schema: StructType,
-      files: Seq[LiveFile],
-      conjs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[LiveFile] = {
+  private def pruneLiveFiles(spark: SparkSession, head: Snapshot, schema: StructType,
+      files: Seq[AddFile],
+      conjs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[AddFile] = {
     if (conjs.isEmpty || files.isEmpty) return files
     var candidates = files
     // under column mapping add.partitionValues and add.stats key by
     // PHYSICAL names — look tuples up physically, hand statsPrune the
     // logical->physical key map
-    val physOf: Map[String, String] = schema.fields.map { fl =>
-      fl.name -> (if (fl.metadata.contains("delta.columnMapping.physicalName"))
-        fl.metadata.getString("delta.columnMapping.physicalName") else fl.name)
-    }.toMap
+    val physOf = head.physicalNames
     val partFields = head.partitionCols.flatMap(pc =>
       schema.fieldNames.find(_.equalsIgnoreCase(pc)).map(schema(_)))
     if (head.partitionCols.nonEmpty && partFields.size == head.partitionCols.size) {
       FileSkipping.partitionPrune(spark, partFields,
         candidates.map(lf => lf.path ->
           partFields.map(fl => lf.partitionValues.get(physOf(fl.name))
-            .orElse(lf.partitionValues.get(fl.name)).orNull)), conjs)
+            .orElse(lf.partitionValues.get(fl.name)).flatten.orNull)), conjs)
         .foreach(kept => candidates = candidates.filter(lf => kept.contains(lf.path)))
     }
     if (candidates.nonEmpty)
@@ -1818,19 +1651,16 @@ object DeltaWriter {
     * still applies: consumers selecting only keys carry only keys
     * through the scan. */
   private[readers] def scanLive(spark: SparkSession, f: FileSystem, table: String,
-      head: HeadState, files: Seq[LiveFile], withRowIndex: Boolean = false): DataFrame = {
+      head: Snapshot, files: Seq[AddFile], withRowIndex: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     // column-mapped tables: data files carry PHYSICAL column names —
     // the scan reads them and immediately renames back to logical, so
     // every consumer above stays logical (the mapped-append inverse)
-    val physOf: Map[String, String] = schema.fields.map { fl =>
-      fl.name -> (if (fl.metadata.contains("delta.columnMapping.physicalName"))
-        fl.metadata.getString("delta.columnMapping.physicalName") else fl.name)
-    }.toMap
-    def pvOf(pv: Map[String, String], pc: String): Option[String] = {
+    val physOf = head.physicalNames
+    def pvOf(pv: Map[String, Option[String]], pc: String): Option[String] = {
       val fl = schema.fieldNames.find(_.equalsIgnoreCase(pc))
-      fl.flatMap(n => pv.get(physOf(n))).orElse(pv.get(pc))
+      fl.flatMap(n => pv.get(physOf(n))).orElse(pv.get(pc)).flatten
     }
     val dataFields = schema.fields.filterNot(fl =>
       head.partitionCols.exists(_.equalsIgnoreCase(fl.name)))
@@ -1887,7 +1717,7 @@ object DeltaWriter {
     * would silently miss them; the caller re-runs against the new
     * state, delta-spark's ConcurrentAppendException stance). */
   private def rewriteCommit(spark: SparkSession, f: FileSystem, table: String,
-      head: HeadState, touched: Seq[LiveFile], output: Option[DataFrame],
+      head: Snapshot, touched: Seq[AddFile], output: Option[DataFrame],
       operation: String, txn: Option[(String, Long)], maxRetries: Int,
       cdc: Option[DataFrame] = None,
       // merge-on-read: (file, descriptor json) pairs re-added IN PLACE
@@ -1895,23 +1725,19 @@ object DeltaWriter {
       // untouched; concurrency-guarded like touched files plus a
       // descriptor-drift check (a rival DV landing between scan and
       // commit would otherwise be silently overwritten)
-      dvRewrites: Seq[(LiveFile, String)] = Nil,
+      dvRewrites: Seq[(AddFile, String)] = Nil,
       // false for layout-only rewrites (OPTIMIZE/zorder): incremental
       // consumers must not see a reshuffle of existing rows as data
       dataChange: Boolean = true): Unit = {
     import org.apache.spark.sql.functions.col
     val tablePath = new Path(table)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     val partCols = head.partitionCols
     val staging = new Path(table.stripSuffix("/") + s"/_staging_${java.util.UUID.randomUUID()}")
     // column-mapped tables stage PHYSICAL names with field ids (the
     // append path's layout) and record stats under them; unmapped
     // tables stage as-is
-    val physOf: Map[String, String] = schema.fields.map { fl =>
-      fl.name -> (if (fl.metadata.contains("delta.columnMapping.physicalName"))
-        fl.metadata.getString("delta.columnMapping.physicalName") else fl.name)
-    }.toMap
+    val physOf = head.physicalNames
     val mapped = head.mappingMode != "none"
     val stageParts =
       if (!mapped) partCols
@@ -2006,17 +1832,8 @@ object DeltaWriter {
           }
         } finally scala.util.Try(f.delete(cdcStaging, true))
       }
-      var attempt = 0
-      var committed = false
       val snapshotLive = head.live.toSet
-      while (!committed) {
-        // version FIRST, state SECOND: a rival landing between the two
-        // then either shows up in headNow (guards refuse) or took this
-        // version (create collides, retry) — the reverse order leaves a
-        // window where a rival escapes both (the Iceberg twin's
-        // round-12 race find)
-        val version = DeltaReader.currentVersion(spark, table) + 1L
-        val headNow = currentState(spark, table)
+      commitOnHead(spark, table, operation, maxRetries) { headNow =>
         require(headNow.schemaJson == head.schemaJson &&
             headNow.partitionCols == head.partitionCols,
           s"delta $operation: the table metadata of $table changed under this rewrite; re-run")
@@ -2040,112 +1857,33 @@ object DeltaWriter {
           s"delta $operation: concurrent write added file(s) ${added.take(3).mkString(", ")} " +
             "whose rows this rewrite never scanned — committing would miss them; re-run")
         val actions = Seq.newBuilder[String]
-        actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-          s""""operation":${js(operation)}}}"""
+        actions += commitInfo(operation)
         txn.foreach { case (appId, v) =>
           actions += s"""{"txn":{"appId":${js(appId)},"version":$v}}"""
         }
-        touched.foreach { e =>
-          val pv = e.partitionValues.map { case (k, v) =>
-            s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-          actions += s"""{"remove":{"path":${js(e.path)},"deletionTimestamp":${System.currentTimeMillis()},""" +
-            s""""dataChange":$dataChange,"partitionValues":$pv}}"""
-        }
-        adds.foreach { a =>
-          val pv = a.partitionValues.map { case (k, v) =>
-            s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-          val encoded = new URI(null, null, "/" + a.path, null).getRawPath.stripPrefix("/")
-          actions += s"""{"add":{"path":${js(encoded)},"partitionValues":$pv,"size":${a.size},""" +
-            s""""modificationTime":${a.mtime},"dataChange":$dataChange""" +
-            a.stats.map(st => s""","stats":${js(st)}""").getOrElse("") + "}}"
-        }
+        touched.foreach(e => actions += removeLine(e.path, e.partitionValues, dataChange))
+        adds.foreach(a => actions +=
+          addLine(encodePath(a.path), a.partitionValues, a.size, a.mtime, dataChange, a.stats))
         dvRewrites.foreach { case (lf, dvJson) =>
-          val pv = lf.partitionValues.map { case (k, v) =>
-            s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-          actions += s"""{"remove":{"path":${js(lf.path)},""" +
-            s""""deletionTimestamp":${System.currentTimeMillis()},""" +
-            s""""dataChange":true,"partitionValues":$pv}}"""
+          actions += removeLine(lf.path, lf.partitionValues, dataChange = true)
           // the SAME file re-adds with the vector: log path verbatim,
           // size/mtime from the untouched bytes, physical stats kept
           // (min/max stay conservative over deleted rows — pruning-safe)
           val st = f.getFileStatus(new Path(resolveLogPath(table, lf.path)))
-          actions += s"""{"add":{"path":${js(lf.path)},"partitionValues":$pv,""" +
-            s""""size":${st.getLen},"modificationTime":${st.getModificationTime},""" +
-            s""""dataChange":true,"deletionVector":$dvJson""" +
-            lf.stats.map(s0 => s""","stats":${js(s0)}""").getOrElse("") + "}}"
+          actions += addLine(lf.path, lf.partitionValues, st.getLen, st.getModificationTime,
+            dataChange = true, lf.stats, dv = Some(dvJson))
         }
         cdcSpecs.foreach { c =>
-          val pv = c.partitionValues.map { case (k, v) =>
-            s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-          val encoded = new URI(null, null, "/" + c.path, null).getRawPath.stripPrefix("/")
-          actions += s"""{"cdc":{"path":${js(encoded)},"partitionValues":$pv,""" +
+          actions += s"""{"cdc":{"path":${js(encodePath(c.path))},"partitionValues":${pvJson(c.partitionValues)},""" +
             s""""size":${c.size},"dataChange":false}}"""
         }
-        val commitPath = new Path(logDir, f"$version%020d.json")
-        val ok = scala.util.Try {
-          val out = f.create(commitPath, false)
-          try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-        }
-        if (ok.isSuccess) committed = true
-        else {
-          attempt += 1
-          require(attempt <= maxRetries,
-            s"delta $operation: lost the commit race $maxRetries times at $table — " +
-              s"giving up (${ok.failed.get.getMessage})")
-        }
+        Some(actions.result())
       }
     } finally scala.util.Try(f.delete(staging, true))
   }
 
-  private case class AddSpec(path: String, partitionValues: Map[String, String],
+  private case class AddSpec(path: String, partitionValues: Map[String, Option[String]],
       size: Long, mtime: Long, stats: Option[String])
-
-  private[readers] case class LiveFile(path: String, partitionValues: Map[String, String],
-      hasDv: Boolean = false, stats: Option[String] = None,
-      dvJson: Option[String] = None, size: Long = 0L) {
-    /** Physical row count from add.stats, if recorded. */
-    def numRecords: Option[Long] = stats.flatMap(s => scala.util.Try(
-      Option(new ObjectMapper().readTree(s).get("numRecords")).map(_.asLong())).toOption.flatten)
-  }
-  private[readers] case class HeadState(schemaJson: String, partitionCols: Seq[String],
-      liveFiles: Seq[LiveFile], metaJson: String = null) {
-    def live: Seq[String] = liveFiles.map(_.path)
-    def mappingMode: String =
-      Option(metaJson).flatMap(mj => scala.util.Try {
-        Option(mapper.readTree(mj).get("configuration"))
-          .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-          .filterNot(_.isNull).map(_.asText())
-      }.toOption.flatten).getOrElse("none")
-    def cdfEnabled: Boolean =
-      Option(metaJson).flatMap(mj => scala.util.Try {
-        Option(mapper.readTree(mj).get("configuration"))
-          .flatMap(c => Option(c.get("delta.enableChangeDataFeed")))
-          .filterNot(_.isNull).map(_.asText())
-      }.toOption.flatten).exists(_.equalsIgnoreCase("true"))
-    def dvEnabled: Boolean =
-      Option(metaJson).flatMap(mj => scala.util.Try {
-        Option(mapper.readTree(mj).get("configuration"))
-          .flatMap(c => Option(c.get("delta.enableDeletionVectors")))
-          .filterNot(_.isNull).map(_.asText())
-      }.toOption.flatten).exists(_.equalsIgnoreCase("true"))
-    def appendOnly: Boolean =
-      Option(metaJson).flatMap(mj => scala.util.Try {
-        Option(mapper.readTree(mj).get("configuration"))
-          .flatMap(c => Option(c.get("delta.appendOnly")))
-          .filterNot(_.isNull).map(_.asText())
-      }.toOption.flatten).exists(_.equalsIgnoreCase("true"))
-    /** CHECK constraints (`delta.constraints.<name>` → expr SQL). */
-    def constraints: Map[String, String] = {
-      import scala.jdk.CollectionConverters._
-      Option(metaJson).flatMap(mj => scala.util.Try {
-        Option(mapper.readTree(mj).get("configuration")).map(_.properties().asScala
-          .filter(_.getKey.toLowerCase.startsWith("delta.constraints."))
-          .map(e => e.getKey.stripPrefix("delta.constraints.") -> e.getValue.asText())
-          .toMap)
-      }.toOption.flatten).getOrElse(Map.empty)
-    }
-  }
 
   /** Validate CHECK constraints over EXISTING rows (addConstraint's
     * declaration gate) — ONE aggregate pass evaluating all of them,
@@ -2171,7 +1909,7 @@ object DeltaWriter {
   /** `delta.appendOnly=true` (writer v2): any operation that removes
     * or rewrites committed rows refuses — appends (and layout-only
     * OPTIMIZE/ZORDER, which preserve every row) stay allowed. */
-  private def requireNotAppendOnly(head: HeadState, table: String, op: String): Unit =
+  private def requireNotAppendOnly(head: Snapshot, table: String, op: String): Unit =
     require(!head.appendOnly,
       s"delta $op: $table is append-only (delta.appendOnly=true) — removing or " +
         "rewriting committed rows is refused by the table's own declaration")
@@ -2183,8 +1921,8 @@ object DeltaWriter {
     * `delta.invariants`, writer v2) and NOT NULL fields — as (label,
     * SQL) pairs under SQL CHECK semantics (only FALSE violates; a
     * NOT NULL gate's `IS NOT NULL` is false exactly on null). */
-  private[readers] def rowGates(head: HeadState): Seq[(String, String)] = {
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+  private[readers] def rowGates(head: Snapshot): Seq[(String, String)] = {
+    val schema = head.schema
     val checks = head.constraints.toSeq.sortBy(_._1)
       .map { case (n, e) => s"$n CHECK ($e)" -> e }
     val invariants = schema.fields.toSeq.flatMap { fl =>
@@ -2203,8 +1941,8 @@ object DeltaWriter {
 
   /** Generated columns (`delta.generationExpression` schema metadata):
     * (column, generation SQL) in table order. */
-  private[readers] def generationExprs(head: HeadState): Seq[(String, String)] = {
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+  private[readers] def generationExprs(head: Snapshot): Seq[(String, String)] = {
+    val schema = head.schema
     schema.fields.toSeq.filter(_.metadata.contains("delta.generationExpression"))
       .map(fl => fl.name -> fl.metadata.getString("delta.generationExpression"))
   }
@@ -2248,7 +1986,7 @@ object DeltaWriter {
     * with a deletion vector read as raw parquet RESURRECTS its deleted
     * rows — both are wrong-answer corruptions, so both refuse naming
     * the connector. */
-  private def requireRewritable(head: HeadState, table: String, op: String,
+  private def requireRewritable(head: Snapshot, table: String, op: String,
       allowMapped: Boolean = false): Unit = {
     if (!allowMapped)
       require(head.mappingMode == "none",
@@ -2262,7 +2000,7 @@ object DeltaWriter {
       // under mapping are staged by the connector, not here)
       require(Set("name", "id").contains(head.mappingMode),
         s"delta $op: unknown column mapping mode '${head.mappingMode}' at $table")
-      val sch = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+      val sch = head.schema
       require(sch.fields.forall(fl => fl.dataType match {
         case _: StructType | _: ArrayType | _: MapType => false
         case _ => true
@@ -2280,113 +2018,13 @@ object DeltaWriter {
         "delta-spark connector")
   }
 
-  /** Raw action lines from a CLASSIC single-file checkpoint (the kind
-    * this writer publishes), or (-1, Nil) when the log carries none.
-    * Multipart/v2 checkpoints refuse — silently ignoring one would
-    * replay a truncated state into removes/rewrites. */
-  private def checkpointLines(spark: SparkSession, f: FileSystem,
-      logDir: Path): (Long, Seq[String]) = {
-    val lastCp = new Path(logDir, "_last_checkpoint")
-    if (!f.exists(lastCp)) return (-1L, Nil)
-    val in = f.open(lastCp)
-    val node = try mapper.readTree(in) finally in.close()
-    val v = node.get("version").asLong()
-    val classic = new Path(logDir, f"$v%020d.checkpoint.parquet")
-    require(f.exists(classic) && !node.hasNonNull("parts"),
-      s"delta writer: checkpoint $v is not a classic single-file checkpoint — " +
-        "multipart/v2 checkpoints are outside this writer's replay profile; " +
-        "read/maintain the table with the delta-spark connector")
-    import org.apache.spark.sql.functions.{col, to_json}
-    val cp = spark.read.parquet(classic.toString)
-    val cols = cp.columns.toSet
-    val lines = Seq.newBuilder[String]
-    Seq("protocol", "metaData", "txn", "add").filter(cols.contains).foreach { c =>
-      cp.where(col(c).isNotNull).select(to_json(col(c))).collect()
-        .foreach(r => lines += s"""{"$c":${r.getString(0)}}""")
-    }
-    (v, lines.result())
-  }
-
-  /** Current schema/partitioning/live files (path + partitionValues)
-    * via a checkpoint-seeded commit-json replay (log paths stay
-    * ENCODED — removes must tombstone the exact log string, not its
-    * decoded form). */
-  private[readers] def currentState(spark: SparkSession, table: String): HeadState =
-    stateAt(spark, table, None)
-
-  /** [[currentState]] generalized to a pinned version ([[restore]]'s
-    * replay): with a checkpoint at or below the target the replay
-    * seeds from it, otherwise it re-runs the raw json chain from 0 —
-    * refusing when log cleaning removed that chain. */
-  private[readers] def stateAt(spark: SparkSession, table: String,
-      versionAsOf: Option[Long]): HeadState = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val (cpV0, cpLines0) = checkpointLines(spark, f, logDir)
-    val allCommits = f.listStatus(logDir).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .sortBy(_.getPath.getName.stripSuffix(".json").toLong)
-    def verOf(st: org.apache.hadoop.fs.FileStatus): Long =
-      st.getPath.getName.stripSuffix(".json").toLong
-    val (cpV, cpLines, commits) = versionAsOf match {
-      case None => (cpV0, cpLines0, allCommits.filter(verOf(_) > cpV0))
-      case Some(v) =>
-        require(allCommits.exists(verOf(_) == v) || cpV0 == v,
-          s"delta: version $v does not exist at $table")
-        if (cpV0 <= v) (cpV0, cpLines0, allCommits.filter(st => verOf(st) > cpV0 && verOf(st) <= v))
-        else {
-          val upTo = allCommits.filter(verOf(_) <= v)
-          require(upTo.map(verOf) == (0L to v),
-            s"delta: cannot reconstruct version $v of $table — the log below " +
-              s"checkpoint $cpV0 was cleaned")
-          (-1L, Nil, upTo)
-        }
-    }
-    require(cpV >= 0 || commits.nonEmpty,
-      s"delta writer: cannot resolve the head state of $table — no commit jsons or checkpoint")
-    var schemaJson: String = null
-    var partitionCols: Seq[String] = Nil
-    var metaJson: String = null
-    val live = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
-    import scala.jdk.CollectionConverters._
-    def applyLine(line: String): Unit = {
-      val a = mapper.readTree(line)
-      Option(a.get("metaData")).filterNot(_.isNull).foreach { m =>
-        schemaJson = Option(m.get("schemaString")).map(_.asText()).getOrElse(schemaJson)
-        partitionCols = Option(m.get("partitionColumns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(partitionCols)
-        metaJson = m.toString
-      }
-      Option(a.get("add")).filterNot(_.isNull).foreach { ad =>
-        val p = ad.get("path").asText()
-        val pv = Option(ad.get("partitionValues")).map(_.properties().asScala.map(e =>
-          e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty[String, String])
-        live(p) = LiveFile(p, pv, hasDv = ad.hasNonNull("deletionVector"),
-          stats = Option(ad.get("stats")).filterNot(_.isNull).map(_.asText()).filter(_.nonEmpty),
-          dvJson = Option(ad.get("deletionVector")).filterNot(_.isNull).map(_.toString),
-          size = Option(ad.get("size")).filterNot(_.isNull).map(_.asLong()).getOrElse(0L))
-      }
-      Option(a.get("remove")).filterNot(_.isNull).foreach(rm => live -= rm.get("path").asText())
-    }
-    cpLines.foreach(applyLine)
-    commits.foreach { st =>
-      val in = f.open(st.getPath)
-      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach(applyLine)
-    }
-    require(schemaJson != null, s"delta writer: no metaData action in $table")
-    HeadState(schemaJson, partitionCols, live.values.toSeq, metaJson)
-  }
-
   /** Live files whose partition tuple satisfies `predicate`, evaluated
     * EXACTLY (a NULL result keeps the file — it is not being replaced).
     * Driver-local: one LocalRelation filter over the tuple strings cast
     * to the schema's types, the partitionPrune mold but two-sided. */
-  private def matchingFiles(spark: SparkSession, head: HeadState, predicate: String): Seq[String] = {
+  private def matchingFiles(spark: SparkSession, head: Snapshot, predicate: String): Seq[String] = {
     import org.apache.spark.sql.functions.{col, expr}
-    val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+    val schema = head.schema
     val partFields = head.partitionCols.map(pc => schema(pc))
     val strSchema = StructType(StructField("__path", StringType) +:
       partFields.map(fl => StructField(fl.name, StringType)))
@@ -2400,36 +2038,11 @@ object DeltaWriter {
     val rows: java.util.List[org.apache.spark.sql.Row] = head.liveFiles.map(lf =>
       org.apache.spark.sql.Row.fromSeq(lf.path +: head.partitionCols.map(pc =>
         lf.partitionValues.get(physByLogical(pc))
-          .orElse(lf.partitionValues.get(pc)).orNull))).asJava
+          .orElse(lf.partitionValues.get(pc)).flatten.orNull))).asJava
     val typed = spark.createDataFrame(rows, strSchema)
       .select(col("__path") +: partFields.map(fl =>
         col(fl.name).cast(fl.dataType).as(fl.name)): _*)
     typed.where(expr(predicate)).select("__path").collect().map(_.getString(0)).toSeq
-  }
-
-  /** VACUUM: delete data files under the table that the CURRENT version
-    * does not reference and whose modification time is older than
-    * `retentionMs` (time travel to versions needing them breaks — the
-    * same trade delta-spark documents; the default 7-day retention
-    * protects in-flight readers and writers, and shortening it requires
-    * `force = true` exactly like the connector's safety check).
-    * Leftover staging directories age out the same way. Returns the
-    * deleted paths; `dryRun` only lists them. */
-  /** The table's effective protocol action (replay rule: the last one
-    * wins), from the checkpoint + commit jsons. */
-  private def lastProtocolLine(spark: SparkSession, f: FileSystem, logDir: Path): String = {
-    val (_, cpLines) = checkpointLines(spark, f, logDir)
-    val commitTexts = f.listStatus(logDir).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .sortBy(_.getPath.getName)
-      .flatMap { st =>
-        val in = f.open(st.getPath)
-        val t = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-        t.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      }
-    (cpLines ++ commitTexts)
-      .filter(l => scala.util.Try(mapper.readTree(l).hasNonNull("protocol")).getOrElse(false))
-      .lastOption.getOrElse("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
   }
 
   /** Writer features each protocol version IMPLIES — the upgrade rule:
@@ -2453,10 +2066,6 @@ object DeltaWriter {
     * cannot). Custom non-delta keys pass verbatim. */
   def setTableConf(spark: SparkSession, table: String, conf: Map[String, String],
       maxRetries: Int = 10): Unit = {
-    val hConf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), hConf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
     require(!conf.keys.exists(_.toLowerCase.startsWith("delta.constraints.")),
       "delta setTableConf: CHECK constraints declare through addConstraint (it " +
         "validates existing rows; a raw property set cannot)")
@@ -2473,9 +2082,7 @@ object DeltaWriter {
       "delta.appendOnly")
     val confC = conf.map { case (k, v) =>
       canonical.find(_.equalsIgnoreCase(k)).getOrElse(k) -> v }
-    var attempt = 0
-    while (true) {
-      val head = currentState(spark, table)
+    commitOnHead(spark, table, "setTableConf", maxRetries) { head =>
       val cdfOn = confC.get("delta.enableChangeDataFeed").exists(_.equalsIgnoreCase("true")) &&
         !head.cdfEnabled
       val dvOn = confC.get("delta.enableDeletionVectors").exists(_.equalsIgnoreCase("true")) &&
@@ -2483,17 +2090,11 @@ object DeltaWriter {
       require(!(dvOn && head.mappingMode != "none"),
         s"delta setTableConf: enabling deletion vectors on the column-mapped table " +
           s"$table is outside this writer's profile; alter with the connector")
-      val version = DeltaReader.currentVersion(spark, table) + 1L
-      val mdNode = mapper.readTree(head.metaJson)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      val cNode = mdNode.withObject("/configuration")
-      confC.foreach { case (k, v) => cNode.put(k, v) }
       val actions = Seq.newBuilder[String]
-      actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-        s""""operation":"SET TBLPROPERTIES"}}"""
-      val proto = mapper.readTree(lastProtocolLine(spark, f, logDir)).get("protocol")
-      val wv = Option(proto.get("minWriterVersion")).map(_.asInt()).getOrElse(2)
-      val rv = Option(proto.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
+      actions += commitInfo("SET TBLPROPERTIES")
+      val proto = head.protocol
+      val wv = head.minWriterVersion
+      val rv = head.minReaderVersion
       if (dvOn && !proto.hasNonNull("writerFeatures")) {
         // version protocol → feature-listed: carry every implied
         // feature plus the vectors (old readers must not resurrect
@@ -2527,16 +2128,11 @@ object DeltaWriter {
         }
       } else if (cdfOn && wv < 4)
         actions += s"""{"protocol":{"minReaderVersion":$rv,"minWriterVersion":4}}"""
-      actions += s"""{"metaData":${mdNode.toString}}"""
-      val ok = scala.util.Try {
-        val out = f.create(new Path(logDir, f"$version%020d.json"), false)
-        try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+      actions += metaLine(head) { md =>
+        val cNode = md.withObject("/configuration")
+        confC.foreach { case (k, v) => cNode.put(k, v) }
       }
-      if (ok.isSuccess) return
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta setTableConf: lost the commit race $maxRetries times at $table — giving up")
+      Some(actions.result())
     }
   }
 
@@ -2545,35 +2141,15 @@ object DeltaWriter {
     * connector's own semantics: emission stops, existing files stay. */
   def unsetTableConf(spark: SparkSession, table: String, keys: Seq[String],
       maxRetries: Int = 10): Unit = {
-    val hConf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), hConf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
     require(!keys.exists(_.toLowerCase.startsWith("delta.constraints.")),
       "delta unsetTableConf: constraints drop through dropConstraint")
-    var attempt = 0
-    while (true) {
-      val head = currentState(spark, table)
-      val version = DeltaReader.currentVersion(spark, table) + 1L
-      val mdNode = mapper.readTree(head.metaJson)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      val cNode = mdNode.withObject("/configuration")
-      import scala.jdk.CollectionConverters._
-      val present = cNode.properties().asScala.map(_.getKey).toSeq
-      keys.foreach { k =>
-        present.find(_.equalsIgnoreCase(k)).foreach(cNode.remove) }
-      val actions = Seq(
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"UNSET TBLPROPERTIES"}}""",
-        s"""{"metaData":${mdNode.toString}}""")
-      val ok = scala.util.Try {
-        val out = f.create(new Path(logDir, f"$version%020d.json"), false)
-        try out.write((actions.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      if (ok.isSuccess) return
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta unsetTableConf: lost the commit race $maxRetries times at $table — giving up")
+    commitOnHead(spark, table, "unsetTableConf", maxRetries) { head =>
+      Some(Seq(commitInfo("UNSET TBLPROPERTIES"), metaLine(head) { md =>
+        val cNode = md.withObject("/configuration")
+        import scala.jdk.CollectionConverters._
+        val present = cNode.properties().asScala.map(_.getKey).toSeq
+        keys.foreach(k => present.find(_.equalsIgnoreCase(k)).foreach(cNode.remove))
+      }))
     }
   }
 
@@ -2589,15 +2165,10 @@ object DeltaWriter {
     * (NULL passes). */
   def addConstraint(spark: SparkSession, table: String, name: String, exprSql: String,
       maxRetries: Int = 10): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
+    val f = DeltaLog.fs(spark, table)
     require(name.nonEmpty && name.matches("[A-Za-z0-9_-]+"),
       s"delta addConstraint: invalid constraint name '$name'")
-    var attempt = 0
-    while (true) {
-      val head = currentState(spark, table)
+    commitOnHead(spark, table, "addConstraint", maxRetries) { head =>
       require(!head.constraints.keys.exists(_.equalsIgnoreCase(name)),
         s"delta addConstraint: constraint '$name' already exists at $table")
       // existing rows must satisfy — a DV-masked scan so already-deleted
@@ -2609,19 +2180,13 @@ object DeltaWriter {
       else // empty table: still analyze the expression against the schema
         enforceConstraints(
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            DataType.fromJson(head.schemaJson).asInstanceOf[StructType]),
+            head.schema),
           Map(name -> exprSql), table, "addConstraint")
-      val version = DeltaReader.currentVersion(spark, table) + 1L
-      val mdNode = mapper.readTree(head.metaJson)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      mdNode.withObject("/configuration").put(s"delta.constraints.$name", exprSql)
       val actions = Seq.newBuilder[String]
-      actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-        s""""operation":"ADD CONSTRAINT"}}"""
+      actions += commitInfo("ADD CONSTRAINT")
       // protocol: CHECK constraints need writer version 3; feature-
       // listed tables (writer 7) add the checkConstraints feature
-      val proto = mapper.readTree(lastProtocolLine(spark, f, logDir)).get("protocol")
-      val wv = Option(proto.get("minWriterVersion")).map(_.asInt()).getOrElse(2)
+      val proto = head.protocol
       if (proto.hasNonNull("writerFeatures")) {
         import scala.jdk.CollectionConverters._
         val feats = proto.get("writerFeatures").elements().asScala.map(_.asText()).toSeq
@@ -2631,19 +2196,10 @@ object DeltaWriter {
           (feats :+ "checkConstraints").foreach(arr.add)
           actions += s"""{"protocol":${p.toString}}"""
         }
-      } else if (wv < 3)
-        actions += s"""{"protocol":{"minReaderVersion":${
-          Option(proto.get("minReaderVersion")).map(_.asInt()).getOrElse(1)},"minWriterVersion":3}}"""
-      actions += s"""{"metaData":${mdNode.toString}}"""
-      val ok = scala.util.Try {
-        val out = f.create(new Path(logDir, f"$version%020d.json"), false)
-        try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      if (ok.isSuccess) return
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta addConstraint: lost the commit race $maxRetries times at $table — giving up")
+      } else if (head.minWriterVersion < 3)
+        actions += s"""{"protocol":{"minReaderVersion":${head.minReaderVersion},"minWriterVersion":3}}"""
+      actions += metaLine(head)(_.withObject("/configuration").put(s"delta.constraints.$name", exprSql))
+      Some(actions.result())
     }
   }
 
@@ -2651,33 +2207,13 @@ object DeltaWriter {
     * (no protocol downgrade — the spec has none). */
   def dropConstraint(spark: SparkSession, table: String, name: String,
       maxRetries: Int = 10): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    var attempt = 0
-    while (true) {
-      val head = currentState(spark, table)
+    commitOnHead(spark, table, "dropConstraint", maxRetries) { head =>
       val key = head.constraints.keys.find(_.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(
           s"delta dropConstraint: no constraint '$name' at $table " +
             s"(have: ${head.constraints.keys.toSeq.sorted.mkString(", ")})"))
-      val version = DeltaReader.currentVersion(spark, table) + 1L
-      val mdNode = mapper.readTree(head.metaJson)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      mdNode.withObject("/configuration").remove(s"delta.constraints.$key")
-      val actions = Seq(
-        s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"DROP CONSTRAINT"}}""",
-        s"""{"metaData":${mdNode.toString}}""")
-      val ok = scala.util.Try {
-        val out = f.create(new Path(logDir, f"$version%020d.json"), false)
-        try out.write((actions.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      if (ok.isSuccess) return
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"delta dropConstraint: lost the commit race $maxRetries times at $table — giving up")
+      Some(Seq(commitInfo("DROP CONSTRAINT"),
+        metaLine(head)(_.withObject("/configuration").remove(s"delta.constraints.$key"))))
     }
   }
 
@@ -2696,43 +2232,25 @@ object DeltaWriter {
     * OPTIMIZE the source first to purge them). Returns the number of
     * files referenced. */
   def cloneTable(spark: SparkSession, src: String, dst: String): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcF = FileSystem.get(new URI(src).resolve("/"), conf)
-    val f = FileSystem.get(new URI(dst).resolve("/"), conf)
-    val srcLog = new Path(src.stripSuffix("/") + "/_delta_log")
-    require(srcF.exists(srcLog), s"not a delta table (no _delta_log): $src")
-    val dstLog = new Path(dst.stripSuffix("/") + "/_delta_log")
-    require(!f.exists(dstLog), s"delta clone: $dst is already a delta table")
-    val head = currentState(spark, src)
+    val srcF = DeltaLog.fs(spark, src)
+    require(!DeltaLog.exists(spark, dst), s"delta clone: $dst is already a delta table")
+    val head = this.head(spark, src)
     require(head.liveFiles.forall(!_.hasDv),
       s"delta clone: $src has live deletion vectors — their descriptors are " +
         "table-relative and cannot be referenced across roots; run " +
         "DeltaWriter.compact (OPTIMIZE purges vectors) first")
-    // the last protocol action wins (same replay rule as metaData)
-    val protocol = lastProtocolLine(spark, srcF, srcLog)
     // the clone is a NEW table: fresh id, same schema/partitioning/conf
-    val mdNode = mapper.readTree(head.metaJson)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    mdNode.put("id", java.util.UUID.randomUUID().toString)
-    mdNode.put("createdTime", System.currentTimeMillis())
-    val actions = Seq.newBuilder[String]
-    actions += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},""" +
-      s""""operation":"CLONE","operationParameters":{"source":${js(src)}}}}"""
-    actions += protocol
-    actions += s"""{"metaData":${mdNode.toString}}"""
-    head.liveFiles.foreach { lf =>
+    // and the source's protocol (the last protocol action wins)
+    val actions = Seq(commitInfo("CLONE", s"""{"source":${js(src)}}"""),
+      s"""{"protocol":${head.protocolJson}}""",
+      metaLine(head) { md =>
+        md.put("id", java.util.UUID.randomUUID().toString)
+        md.put("createdTime", System.currentTimeMillis())
+      }) ++ head.liveFiles.map { lf =>
       val abs = srcF.makeQualified(new Path(resolveLogPath(src, lf.path))).toUri.toString
-      val pv = lf.partitionValues.map { case (k, v) =>
-        s"${js(k)}:${if (v == null) "null" else js(v)}" }.mkString("{", ",", "}")
-      actions += s"""{"add":{"path":${js(abs)},"partitionValues":$pv,"size":${lf.size},""" +
-        s""""modificationTime":0,"dataChange":true""" +
-        lf.stats.map(st => s""","stats":${js(st)}""").getOrElse("") + "}}"
+      addLine(abs, lf.partitionValues, lf.size, 0L, dataChange = true, lf.stats)
     }
-    f.mkdirs(dstLog)
-    val commitPath = new Path(dstLog, f"${0L}%020d.json")
-    val out = f.create(commitPath, /* overwrite = */ false)
-    try out.write((actions.result().mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    DeltaLog.publish(spark, dst, 0L, actions).get
     head.liveFiles.size
   }
 
@@ -2752,34 +2270,30 @@ object DeltaWriter {
     require(retentionMs >= 7L * 24 * 3600 * 1000 || force,
       s"delta writer: log retention ${retentionMs}ms is under 7 days — streams and " +
         "time-travel readers may still replay those commits; pass force = true to override")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val logDir = new Path(table.stripSuffix("/") + "/_delta_log")
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
-    require(f.exists(logDir), s"not a delta table (no _delta_log): $table")
-    val (cpV, _) = checkpointLines(spark, f, logDir)
+    val cpV = head(spark, table).checkpointVersion
     require(cpV >= 0,
       s"delta cleanupLog: $table has no checkpoint — deleting commit jsons would " +
         "break head replay entirely; run DeltaWriter.checkpoint first")
-    val cutoff = System.currentTimeMillis() - retentionMs
-    val victims = f.listStatus(logDir).toSeq
-      .filter(st => st.getPath.getName.matches("\\d{20}\\.json"))
-      .filter(st => st.getPath.getName.stripSuffix(".json").toLong <= cpV)
-      .filter(_.getModificationTime < cutoff)
-      .sortBy(_.getPath.getName)
-    if (!dryRun) victims.foreach(st => f.delete(st.getPath, false))
-    victims.map(_.getPath.getName)
+    DeltaLog.expireCommits(spark, table, cpV, System.currentTimeMillis() - retentionMs, dryRun)
   }
 
+  /** VACUUM: delete data files under the table that the CURRENT version
+    * does not reference and whose modification time is older than
+    * `retentionMs` (time travel to versions needing them breaks — the
+    * same trade delta-spark documents; the default 7-day retention
+    * protects in-flight readers and writers, and shortening it requires
+    * `force = true` exactly like the connector's safety check).
+    * Leftover staging directories age out the same way. Returns the
+    * deleted paths; `dryRun` only lists them. */
   def vacuum(spark: SparkSession, table: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000, force: Boolean = false,
       dryRun: Boolean = false): Seq[String] = {
     require(retentionMs >= 7L * 24 * 3600 * 1000 || force,
       s"delta writer: vacuum retention ${retentionMs}ms is under 7 days — in-flight " +
         "readers/writers may still reference those files; pass force = true to override")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = FileSystem.get(new URI(table).resolve("/"), conf)
+    val f = DeltaLog.fs(spark, table)
     val tablePath = new Path(table)
-    val head = currentState(spark, table)
+    val head = this.head(spark, table)
     val liveResolved: Set[String] = head.live.map(p =>
       f.makeQualified(new Path(tablePath, PathKeys.percentDecode(p))).toString).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
@@ -2813,12 +2327,11 @@ object DeltaWriter {
   /** `p=7/q=3/part-....parquet` → Map(p -> 7, q -> 3) with Spark's
     * directory escaping decoded (a __HIVE_DEFAULT_PARTITION__ segment
     * is a null value). */
-  private def partitionValues(rel: String): Map[String, String] =
+  private def partitionValues(rel: String): Map[String, Option[String]] =
     rel.split("/").dropRight(1).filter(_.contains("=")).map { seg =>
       val k = seg.takeWhile(_ != '=')
-      val raw = seg.drop(k.length + 1)
-      val v = PathKeys.percentDecode(raw)
-      k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else v)
+      val v = PathKeys.percentDecode(seg.drop(k.length + 1))
+      k -> Option(v).filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
     }.toMap
 
   /** Delta `stats` JSON from the parquet footer: numRecords always;

@@ -355,7 +355,7 @@ class DeltaMergeSpec extends SparkSpec {
     val df = spark.range(70).select($"id", ($"id" % 70).cast("int").as("p"),
       ($"id" * 10).cast("int").as("v"))
     DeltaWriter.write(spark, df, t, partitionBy = Seq("p"))
-    val head = DeltaWriter.currentState(spark, t)
+    val head = DeltaLog.snapshot(spark, t)
     assert(head.liveFiles.map(_.partitionValues).distinct.size == 70)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(t).resolve("/"), spark.sparkContext.hadoopConfiguration)
@@ -669,7 +669,7 @@ class DeltaMergeSpec extends SparkSpec {
       (0 until 10).map(i => (i.toLong, i * 10)).toDF("id", "v").coalesce(1), t,
       tableConf = Map("delta.enableDeletionVectors" -> "true",
         "delta.enableChangeDataFeed" -> "true"))
-    val origPath = DeltaWriter.currentState(spark, t).liveFiles.head.path
+    val origPath = DeltaLog.snapshot(spark, t).liveFiles.head.path
     assert(DeltaWriter.deleteWhere(spark, t, "id IN (2, 4)") == 2L)
     // a 1-matched-row upsert: the old file's BYTES stay, its vector
     // grows by the updated row's position, and only the post-image +
@@ -679,7 +679,7 @@ class DeltaMergeSpec extends SparkSpec {
       .collect().sortBy(_._1).toSeq
     assert(got == Seq((0L, 0), (1L, 10), (3L, 999), (5L, 50), (6L, 60),
       (7L, 70), (8L, 80), (9L, 90), (42L, 1)))
-    val head1 = DeltaWriter.currentState(spark, t)
+    val head1 = DeltaLog.snapshot(spark, t)
     val old1 = head1.liveFiles.find(_.path == origPath)
       .getOrElse(fail("the original file must still be live"))
     assert(old1.hasDv)
@@ -700,7 +700,7 @@ class DeltaMergeSpec extends SparkSpec {
     DeltaWriter.merge(spark,
       Seq((0L, -1), (1L, -1), (5L, -1), (6L, -1), (7L, -1)).toDF("id", "v"), t,
       on = Seq("id"), insertNotMatched = false)
-    assert(DeltaWriter.currentState(spark, t).liveFiles.forall(!_.hasDv))
+    assert(DeltaLog.snapshot(spark, t).liveFiles.forall(!_.hasDv))
     assert(DeltaReader.read(spark, t).select("id", "v").as[(Long, Int)]
       .collect().sortBy(_._1).toSeq == Seq((0L, -1), (1L, -1), (3L, 999),
       (5L, -1), (6L, -1), (7L, -1), (8L, 80), (9L, 90), (42L, 1)))
@@ -714,7 +714,7 @@ class DeltaMergeSpec extends SparkSpec {
       tableConf = Map("delta.enableDeletionVectors" -> "true"))
     assert(DeltaWriter.deleteWhere(spark, t, "id IN (2, 4)") == 2L)
     assert(DeltaWriter.compact(spark, t) == 1) // the DV'd file is a group of one
-    val head = DeltaWriter.currentState(spark, t)
+    val head = DeltaLog.snapshot(spark, t)
     assert(head.liveFiles.size == 1 && head.liveFiles.forall(!_.hasDv),
       "compaction must rewrite the vector away")
     assert(DeltaReader.read(spark, t).select("id").as[Long].collect().sorted.toSeq ==
@@ -764,7 +764,7 @@ class DeltaMergeSpec extends SparkSpec {
     val afterAdd = DeltaReader.read(spark, t)
       .selectExpr("id", "coalesce(x, -1.0) as x").as[(Long, Double)].collect().sortBy(_._1)
     assert(afterAdd.toSeq == Seq((1L, -1.0), (2L, -1.0), (3L, 1.5)))
-    val head1 = DeltaWriter.currentState(spark, t)
+    val head1 = DeltaLog.snapshot(spark, t)
     val xField = org.apache.spark.sql.types.DataType.fromJson(head1.schemaJson)
       .asInstanceOf[StructType].fields.find(_.name == "x").get
     assert(xField.metadata.getString("delta.columnMapping.physicalName").startsWith("col-"))
@@ -807,7 +807,7 @@ class DeltaMergeSpec extends SparkSpec {
       .selectExpr("id", "coalesce(x, -1.0) as x").as[(Long, Double)].collect().sortBy(_._1)
     assert(resurrect.toSeq == Seq((1L, -1.0), (3L, -1.0), (5L, -1.0), (6L, 9.9)),
       s"dropped values must not resurrect: ${resurrect.toSeq}")
-    val head2 = DeltaWriter.currentState(spark, t)
+    val head2 = DeltaLog.snapshot(spark, t)
     val x2 = org.apache.spark.sql.types.DataType.fromJson(head2.schemaJson)
       .asInstanceOf[StructType].fields.find(_.name == "x").get
     assert(x2.metadata.getLong("delta.columnMapping.id") == 5L)

@@ -858,6 +858,22 @@ class DeltaWriterSpec extends SparkSpec {
     assert(d2.getAs[Int]("minWriterVersion") == 4)
   }
 
+  test("detail reports the checkpointed protocol after the log is cleaned") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("dwdetcp").toString
+    DeltaWriter.write(spark, Seq((1L, "a")).toDF("id", "name"), t,
+      tableConf = Map("delta.enableChangeDataFeed" -> "true"))
+    DeltaWriter.write(spark, Seq((2L, "b")).toDF("id", "name"), t)
+    assert(DeltaWriter.checkpoint(spark, t) == 1L)
+    // both commit jsons (and with them the create's protocol action) go:
+    // the protocol now lives only in the checkpoint
+    assert(DeltaWriter.cleanupLog(spark, t, retentionMs = 0, force = true).size == 2)
+    val d = DeltaReader.detail(spark, t).collect().head
+    assert(d.getAs[Int]("minWriterVersion") == 4)
+    assert(d.getAs[Int]("minReaderVersion") == 1)
+    assert(d.getAs[Long]("numFiles") == 2L)
+  }
+
   test("zorder: clustered rewrite makes multi-column skipping real; layout-only commit") {
     import spark.implicits._
     val t = Files.createTempDirectory("dwz").toString
