@@ -188,7 +188,7 @@ case class GramHashes(child: Expression, n: Int)
   *
   * Value parity is BIT-FOR-BIT with the staged path (MinHashSigSpec
   * pins it over every row shape, and the staged reference stays in
-  * Dedup as `stagedMinhashSignature`): token hash = Spark's
+  * test sources as `DedupOracles.stagedMinhashSignature`): token hash = Spark's
   * `xxhash64(tok)` (seed 42, null tokens contribute the seed exactly
   * like `xxhash64(null)`), normalized into the 2^31-1 prime field;
   * shingle hash = the order-sensitive affine combination of its
@@ -336,7 +336,8 @@ object MinHashSig {
   * beyond the buffer per row.
   *
   * Value parity is BIT-FOR-BIT with the HOF form (SimHash64Spec pins
-  * it, with the HOF reference kept in Dedup as `simhashHof`): token
+  * it, with the HOF reference kept in test sources as
+  * `DedupOracles.simhashHof`): token
   * hash = Spark's `xxhash64(tok)` (null tokens vote with the default
   * seed's bits, exactly like `xxhash64(null)` in the lambda); bit i of
   * the result is set iff the +-1 vote sum at position i is strictly

@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   * intake/readers/inspect.py:778 inspect_dataset): detected kind, chosen
   * reader, schema, sample row count, file stats — without a full read.
   *
-  * Tiering collapses on Spark (SURVEY §3 EP3): parquet/orc/avro schema is
-  * a footer read (lazy), csv/json sample via limit; file stats from
-  * Hadoop FS. `maxBytes` guards full reads like the reference's 50 MB
-  * default (inspect.py:781).
+  * Tiering collapses on Spark (SURVEY §3 EP3): the schema comes from the
+  * reader's memoized resolution and the sample from its `discover`,
+  * which serves a repeat inspect of unchanged files from the stored
+  * sample rows with no Spark job; file stats from Hadoop FS. `maxBytes`
+  * guards full reads like the reference's 50 MB default (inspect.py:781).
   */
 final case class InspectResult(
     url: String,
@@ -44,7 +45,7 @@ object Inspect {
     val (nFiles, totalBytes) = fileStats(url, spark.sparkContext.hadoopConfiguration)
     val df = reader.read(spark, ref)
     val sample =
-      if (totalBytes <= maxBytes) reader.discover(spark, ref).count()
+      if (totalBytes <= maxBytes) reader.discover(spark, ref).collect().length.toLong
       else 0L // guarded, like tier-3 max_bytes
     InspectResult(
       url = url,

@@ -326,7 +326,7 @@ object Dedup {
     * `transform(toks, xxhash64)` + JIT'd Scala UDF) still paid an
     * interpreted ArrayTransform dispatch per TOKEN plus the UDF's
     * Seq[Long] boxing bridge per row; both are gone (bit parity pinned
-    * in MinHashSigSpec against [[stagedMinhashSignature]]). `repartitionTo` spreads a
+    * in MinHashSigSpec against the staged oracle in test sources). `repartitionTo` spreads a
     * single-file scan across cores before the compute-heavy stage (a
     * 100 TB input already has thousands of partitions; a local
     * single-parquet-file scan has one).
@@ -343,56 +343,6 @@ object Dedup {
     val base = repartitionTo.map(df.repartition(_)).getOrElse(df)
     base.withColumn(outCol,
       graft.functions.TextFunctions.minhashSig(TextOps.tokens(col(textCol)), shingleN, k, seed))
-  }
-
-  /** The round-18 STAGED signature pipeline (flat interpreted
-    * `transform(toks, xxhash64)` + JIT-compiled UDF over primitive
-    * arrays — itself ~100× faster than the round-2 per-shingle HOF
-    * tree), kept as the independent parity oracle for the fused
-    * [[graft.functions.MinHashSig]] expression: MinHashSigSpec asserts
-    * the two produce bit-identical signatures on every row shape, so
-    * any drift in the fused codegen re-keys nothing silently.
-    */
-  private[graft] def stagedMinhashSignature(
-      textCol: Column, shingleN: Int, k: Int, seed: Long): Column = {
-    val (a, b) = coeffs(k, seed)
-    val aArr = a.toArray
-    val bArr = b.toArray
-    val cArr = graft.functions.MinHashSig.shingleCoeffs(shingleN, seed)
-    val p = MersennePrime
-    val kk = k
-    val nSh = shingleN
-    val sigUdf = udf { (tokenHashes: Seq[Long]) =>
-      // null text → null token array → null signature; the banding
-      // entry points filter null signatures explicitly (xxhash64 skips
-      // null args, so an unfiltered null sig would degenerate-bucket)
-      if (tokenHashes == null) null
-      else {
-      val th = tokenHashes.toArray
-      var i = 0
-      while (i < th.length) { th(i) = ((th(i) % p) + p) % p; i += 1 }
-      val nShingles = math.max(1, th.length - nSh + 1)
-      val out = Array.fill(kk)(Long.MaxValue)
-      var j = 0
-      while (j < nShingles) {
-        // shingle hash: affine combination of its tokens' hashes — token
-        // order matters, matching string shingles' order sensitivity
-        var sh = 0L
-        var t = 0
-        val w = math.min(nSh, th.length)
-        while (t < w) { sh = (sh + cArr(t) * th(j + t)) % p; t += 1 }
-        var i2 = 0
-        while (i2 < kk) {
-          val v = (aArr(i2) * sh + bArr(i2)) % p
-          if (v < out(i2)) out(i2) = v
-          i2 += 1
-        }
-        j += 1
-      }
-      if (th.isEmpty) Array.fill(kk)(0L) else out
-      }
-    }
-    sigUdf(transform(TextOps.tokens(textCol), t => xxhash64(t)))
   }
 
   /** Candidate generation shared by the xxhash64 and portable LSH
@@ -1710,38 +1660,10 @@ object Dedup {
     * xxhash64(token); the sign gives the output bit. One fused
     * whole-stage-codegen expression ([[graft.functions.SimHash64]],
     * round 19 — the nested-HOF predecessor paid ~64 interpreted nodes
-    * per token; bit parity vs [[simhashHof]] pinned in SimHash64Spec).
+    * per token; bit parity vs the HOF oracle in test sources, pinned in SimHash64Spec).
     */
   def simhash(text: Column): Column =
     graft.functions.TextFunctions.simhash64(TextOps.tokens(text))
-
-  /** The round-2 nested-HOF SimHash formulation, kept as the
-    * independent parity oracle for the fused
-    * [[graft.functions.SimHash64]] expression (SimHash64Spec asserts
-    * bit equality on every row shape — any codegen drift would
-    * silently re-key q43's full-corpus output).
-    */
-  private[graft] def simhashHof(text: Column): Column = {
-    val toks = TextOps.tokens(text)
-    val bitSums = aggregate(
-      toks,
-      array_repeat(lit(0), 64),
-      (acc, t) =>
-        zip_with(
-          acc,
-          transform(
-            sequence(lit(0), lit(63)),
-            i => when(call_function("shiftright", xxhash64(t), i).bitwiseAND(1) === 1, 1).otherwise(-1)
-          ),
-          (a, b) => a + b
-        )
-    )
-    aggregate(
-      zip_with(bitSums, sequence(lit(0), lit(63)), (s, i) => when(s > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L),
-      (acc, v) => acc.bitwiseOR(v)
-    )
-  }
 
   /** DuckDB-replicable 64-bit SimHash: per token, the little-endian
     * uint64 of the first 8 md5 bytes (DuckDB `md5_number_upper`, same

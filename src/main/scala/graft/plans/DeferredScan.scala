@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Attribu
   EqualTo, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, NamedExpression,
   SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter,
   LeftSemi, RightOuter}
@@ -62,6 +63,11 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, De
   * (connector semantics: register once, every query sees the live
   * table), and a self-joined view realizes one independent subtree per
   * leg (via [[MultiInstanceRelation]]) with no shared expression ids.
+  *
+  * The same leaf serves `Resolve.sample` (every file reader's
+  * `discover`): there the rescan ignores the files' layout and returns
+  * the memoized sample rows as a local relation, applying any pushed
+  * filter to those rows — a filter over a sample never reaches its scan.
   *
   * Profile note: this machinery (and native-table file skipping in
   * general) is BATCH-only. The native `graft-delta` STREAMING source
@@ -217,7 +223,17 @@ object ResolveDeferredScans extends Rule[LogicalPlan] {
     // scope bookkeeping and the join-matching transform entirely
     if (!plan.exists(_.isInstanceOf[DeferredScan])) return plan
     SnapshotPin.enter()
-    try applyResolved(plan) finally SnapshotPin.exit()
+    try foldLocal(applyResolved(plan)) finally SnapshotPin.exit()
+  }
+
+  /** A leaf realized as a local relation (a stored discover sample)
+    * leaves Projects, Filters and Limits above it that the optimizer's
+    * LocalRelation batch, which ran before this rule, never saw; folding
+    * them here lets an action over the sample run on the driver with no
+    * job. */
+  private def foldLocal(plan: LogicalPlan): LogicalPlan = {
+    val next = ConvertToLocalRelation(plan)
+    if (next.fastEquals(plan)) plan else foldLocal(next)
   }
 
   private def applyResolved(plan: LogicalPlan): LogicalPlan = plan.transformDown {

@@ -262,12 +262,12 @@ object StreamingBatchQueries {
     (
       "q56_group_sketch_union",
       // Per-source MinHash sketch union over documents. Engine-specific
-      // hashes → rows-only check; semantics spec'd in ConvertAndOutputSpec.
+      // hashes → rows-only check; semantics spec'd in R22OptimizationSpec.
       //
       // r22 (guide §4 — built-ins over an opaque UDAF): the union is an
       // elementwise min over fixed-length (k=64) signatures, so it runs
       // as a codegen'd min-fold over the posexploded slots —
-      // partial+final HashAggregates — instead of the typed MinHashUnion
+      // partial+final HashAggregates — instead of a typed sketch-union
       // Aggregator, whose ObjectHashAggregate paid an encoder round-trip
       // (Seq[Long] ⇄ UnsafeArray) per ROW on reduce plus
       // DeserializeToObject/SerializeFromObject stages for the
@@ -276,9 +276,8 @@ object StreamingBatchQueries {
       // pins that, incl. the empty-token all-zeros row), so the
       // Aggregator's length-keeping merge IS the per-slot min;
       // R22OptimizationSpec runs both formulations over every row shape
-      // and asserts equal rows. The declared MinHashUnion Aggregator
-      // surface stays exercised there and in ConvertAndOutputSpec —
-      // this query's plan just no longer pays its ser/de tax. (A wide
+      // and asserts equal rows; the Aggregator lives on in test sources
+      // as that spec's oracle (`graft.functions.MinHashUnion`). (A wide
       // k-column min aggregate would be one exchange fewer, but
       // Catalyst folds size(array(..)) and prunes every slot the
       // 2-slot sketch_head doesn't read — 62/64 of the union's work
@@ -301,7 +300,7 @@ object StreamingBatchQueries {
     * signatures posexplode to (source, slot, value) rows, a
     * partial+final min per (source, slot) computes every union slot,
     * and a second tiny aggregate reassembles the exact
-    * (source, sketch_len, sketch_head) projection the MinHashUnion
+    * (source, sketch_len, sketch_head) projection the retired
     * Aggregator formulation produced — sketch_len counts the slot rows
     * (≡ the merged buffer's length: every input sig is length k) and
     * sketch_head picks the slot-0/slot-1 mins (≡ take(2).mkString(",")).

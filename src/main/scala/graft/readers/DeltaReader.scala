@@ -646,8 +646,8 @@ object DeltaReader {
   /** The reader's profile gates, applied to the shared snapshot at
     * read time: parquet tables with `minReaderVersion` 1, or 2/3 with
     * reader features limited to timestampNtz/v2Checkpoint/
-    * deletionVectors/columnMapping, a known column mapping mode, and
-    * at least one live data file. */
+    * deletionVectors/columnMapping, and a known column mapping mode. A
+    * table with no live data file (every row deleted) reads empty. */
   private def gated(s: DeltaLog.Snapshot): DeltaLog.Snapshot = {
     import scala.jdk.CollectionConverters._
     require(s.provider == "parquet", s"delta: format provider '${s.provider}' outside the supported profile")
@@ -659,7 +659,6 @@ object DeltaReader {
       s"delta: reader features ${gating.mkString(",")} outside the supported profile")
     require(Set("none", "name", "id").contains(s.mappingMode),
       s"delta: column mapping mode '${s.mappingMode}' outside the supported profile")
-    require(s.liveFiles.nonEmpty, s"delta: table has no live data files")
     s
   }
 
@@ -807,7 +806,7 @@ object DeltaReader {
     // changes read: restrict the scan to the window's surviving adds
     var liveEntries: Seq[DeltaLog.AddFile] =
       changes.fold(state.liveFiles: Seq[DeltaLog.AddFile])(m => state.liveFiles.filter(e => m.contains(e.path)))
-    if (changes.isDefined && liveEntries.isEmpty) return emptyTyped()
+    if (liveEntries.isEmpty) return emptyTyped()
     if (filterConjs.nonEmpty) {
       if (partitionCols.nonEmpty) {
         val partFields = partitionCols.map(pc => StructField(pc, schema(pc).dataType))

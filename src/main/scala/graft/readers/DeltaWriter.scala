@@ -985,7 +985,8 @@ object DeltaWriter {
         if (!head.cdfEnabled) None
         else Some(shared.where(expr(predicate))
           .drop(FileCol).withColumn("_change_type", lit("delete")))
-      rewriteCommit(spark, f, table, head, touched, Some(survivors), "DELETE", None, maxRetries, cdc)
+      rewriteCommit(spark, f, table, head, touched, survivorsOf(touched, deletedRows, survivors),
+        "DELETE", None, maxRetries, cdc)
     } finally if (head.cdfEnabled) shared.unpersist()
     deletedRows
   }
@@ -1098,6 +1099,17 @@ object DeltaWriter {
     deletedRows
   }
 
+  /** A copy-on-write delete's rewrite output: None when the delete
+    * emptied every file it touched (their live rows, add.stats minus
+    * vector cardinality, all matched), so the commit carries the removes
+    * alone instead of a zero-row add staged from the empty survivors. */
+  private def survivorsOf(touched: Seq[AddFile], deletedRows: Long,
+      survivors: DataFrame): Option[DataFrame] = {
+    val liveRows = touched.map(lf => lf.numRecords.map(_ - lf.dv.map(_.cardinality).getOrElse(0L)))
+    if (liveRows.forall(_.isDefined) && liveRows.flatten.sum == deletedRows) None
+    else Some(survivors)
+  }
+
   /** Copy-on-write DELETE with existing vectors masked out: the
     * fallback when fresh deletions are too large a fraction for a
     * vector. Touched files rewrite WITHOUT vectors (their masked rows
@@ -1123,7 +1135,8 @@ object DeltaWriter {
         if (!head.cdfEnabled) None
         else Some(shared.where(expr(predicate))
           .drop(FileCol).withColumn("_change_type", lit("delete")))
-      rewriteCommit(spark, f, table, head, touched, Some(survivors), "DELETE", None, maxRetries, cdc)
+      rewriteCommit(spark, f, table, head, touched, survivorsOf(touched, deletedRows, survivors),
+        "DELETE", None, maxRetries, cdc)
     } finally if (head.cdfEnabled) shared.unpersist()
     deletedRows
   }

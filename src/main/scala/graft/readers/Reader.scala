@@ -22,8 +22,11 @@ trait Reader extends Tokenizable {
   /** Instance-level veto (reference readers.py:219-244 `is_ok`). */
   def isOk(ref: DataRef): Boolean = implementsKinds.contains(ref.kind)
   def read(spark: SparkSession, ref: DataRef): DataFrame
-  /** Cheap sample — the reference's Spark reader does exactly this
-    * (readers.py:525-526 `.limit(10)`). */
+  /** Cheap sample: the rows `read(spark, ref).limit(n)` returns (the
+    * reference's Spark reader does exactly this, readers.py:525-526
+    * `.limit(10)`). The call launches no job. [[FormatReader]] serves a
+    * repeat sample of unchanged files from [[Resolve.sample]]'s memo, so
+    * its later actions run no file scan and no job. */
   def discover(spark: SparkSession, ref: DataRef, n: Int = 10): DataFrame =
     read(spark, ref).limit(n)
 
@@ -31,7 +34,8 @@ trait Reader extends Tokenizable {
   def tokenAttrs: Map[String, Any] = Map("name" -> name)
 }
 
-/** Generic `spark.read.format(fmt)` reader, loading through [[Resolve.load]]. */
+/** Generic `spark.read.format(fmt)` reader, loading through [[Resolve.load]]
+  * and sampling through [[Resolve.sample]]. */
 class FormatReader(
     val name: String,
     fmt: String,
@@ -43,6 +47,8 @@ class FormatReader(
     requiredClass.forall(c => scala.util.Try(Class.forName(c)).isSuccess)
   def read(spark: SparkSession, ref: DataRef): DataFrame =
     Resolve.load(spark, fmt, ref.url, defaults ++ ref.options)
+  override def discover(spark: SparkSession, ref: DataRef, n: Int = 10): DataFrame =
+    Resolve.sample(spark, fmt, ref.url, defaults ++ ref.options, n)
 }
 
 object SparkReaders {

@@ -3,8 +3,6 @@ package graft.convert
 import graft.SparkSpec
 import graft.catalog.Catalog
 import graft.datatypes.DataRef
-import graft.functions.{MinHashUnion, MinHashUtil}
-import graft.ops.Dedup
 import graft.output.Writers
 import graft.pipeline.Combinators
 import java.nio.file.Files
@@ -122,28 +120,5 @@ class ConvertAndOutputSpec extends SparkSpec {
     val row = parsed.filter(col("properties.name") === "alpha").head()
     assert(row.getAs[org.apache.spark.sql.Row]("geometry").getAs[String]("type") == "Point")
     assert(row.getAs[org.apache.spark.sql.Row]("properties").getAs[Long]("pop") == 10L)
-  }
-
-  test("MinHashUnion aggregates group sketches whose union estimates Jaccard") {
-    val docs = Seq(
-      ("g1", "spark catalyst optimizer shuffles partitions"),
-      ("g1", "spark tungsten codegen partitions"),
-      ("g2", "spark catalyst optimizer shuffles partitions"),
-      ("g2", "spark tungsten codegen partitions"),
-      ("g3", "entirely unrelated words about cooking pasta")
-    ).toDF("grp", "text")
-    val sigs = Dedup.withMinhashSignature(docs, "text", "sig", shingleN = 1, k = 128)
-    val grouped = sigs.select(col("grp"), col("sig").as("value"))
-      .as[(String, Seq[Long])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(MinHashUnion.column)
-      .collect()
-      .toMap
-    // identical groups g1/g2 -> identical union sketches
-    assert(grouped("g1") == grouped("g2"))
-    assert(MinHashUtil.estJaccard(grouped("g1"), grouped("g2")) == 1.0)
-    // unrelated g3 -> low similarity
-    assert(MinHashUtil.estJaccard(grouped("g1"), grouped("g3")) < 0.3)
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, DedupOracles, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Seeded randomized parity sweep over ALL round-19 fused expressions
@@ -46,9 +46,9 @@ class FuzzParitySpec extends SparkSpec {
       TextFunctions.nonBlankLines(col("text")).as("lines_f"),
       filter(split(col("text"), "\n"), l => length(trim(l)) > 0).as("lines_h"),
       Dedup.simhash(col("text")).as("sim_f"),
-      Dedup.simhashHof(col("text")).as("sim_h"),
+      DedupOracles.simhashHof(col("text")).as("sim_h"),
       TextFunctions.minhashSig(TextOps.tokens(col("text")), 3, 16, 42L).as("mh_f"),
-      Dedup.stagedMinhashSignature(col("text"), 3, 16, 42L).as("mh_h")
+      DedupOracles.stagedMinhashSignature(col("text"), 3, 16, 42L).as("mh_h")
     ).as[(Option[String], Option[Seq[String]], Option[Seq[String]], Option[Int], Option[Int],
           Option[Seq[String]], Option[Seq[String]], Option[Long], Option[Long],
           Option[Seq[Long]], Option[Seq[Long]])].collect()

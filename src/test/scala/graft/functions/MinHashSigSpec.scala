@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, DedupOracles, TextOps}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Parity pins for the round-19 fused [[MinHashSig]] expression: it
   * must reproduce the round-18 staged pipeline
-  * ([[Dedup.stagedMinhashSignature]]: interpreted transform+xxhash64 →
+  * ([[DedupOracles.stagedMinhashSignature]]: interpreted transform+xxhash64 →
   * JIT'd UDF) bit-for-bit — the fusion is a pure performance move and
   * any value drift would silently re-band every LSH bucket in q42/q63
   * and the near-dup scale probes.
@@ -34,7 +34,7 @@ class MinHashSigSpec extends SparkSpec {
       val rows = texts
         .select(col("id"),
           TextFunctions.minhashSig(TextOps.tokens(col("text")), n, k, 42L).as("fused"),
-          Dedup.stagedMinhashSignature(col("text"), n, k, 42L).as("staged"))
+          DedupOracles.stagedMinhashSignature(col("text"), n, k, 42L).as("staged"))
         .as[(Long, Seq[Long], Seq[Long])].collect()
       assert(rows.length == 8)
       rows.foreach { case (id, fused, staged) =>
@@ -52,7 +52,7 @@ class MinHashSigSpec extends SparkSpec {
     // non-default seed still matches the staged reference
     val pair = texts.filter(col("id") === 0L)
       .select(TextFunctions.minhashSig(TextOps.tokens(col("text")), 2, 4, 7L).as("f"),
-        Dedup.stagedMinhashSignature(col("text"), 2, 4, 7L).as("s"))
+        DedupOracles.stagedMinhashSignature(col("text"), 2, 4, 7L).as("s"))
       .as[(Seq[Long], Seq[Long])].head()
     assert(pair._1 == pair._2)
   }
@@ -68,8 +68,8 @@ class MinHashSigSpec extends SparkSpec {
     assert(fused == staged, s"fused=$fused staged=$staged")
   }
 
-  // The staged pipeline shape from Dedup.stagedMinhashSignature but over an
-  // arbitrary token-array column (the private method takes a text column).
+  // The staged pipeline shape from DedupOracles.stagedMinhashSignature but over an
+  // arbitrary token-array column (the oracle takes a text column).
   private def bridgeStaged(toks: org.apache.spark.sql.Column, n: Int, k: Int, seed: Long) = {
     val (a, b) = MinHashSig.affineCoeffs(k, seed)
     val c = MinHashSig.shingleCoeffs(n, seed)

@@ -1,15 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, TypedColumn}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Per-group MinHash sketch union: merges row-level signatures
-  * elementwise-min into one signature per group (SURVEY §7 "per-group
-  * sketch union → Aggregator[IN,BUF,OUT]"). Lets a grouped corpus (by
-  * domain, source, crawl...) carry one constant-size near-dup sketch per
-  * group; union of two groups' sketches = sketch of their union, so the
-  * aggregation is associative and Spark runs it partial+final (map-side
-  * combine — only k longs per group cross the shuffle).
+/** Per-group MinHash sketch union as a typed Aggregator: merges row-level
+  * signatures elementwise-min into one signature per group. q56 once ran
+  * this shape; it now runs the codegen'd posexplode min-fold
+  * (`StreamingBatchQueries.sketchUnionMinFold`), and this formulation is
+  * kept only as R22OptimizationSpec's parity oracle for that fold.
   */
 object MinHashUnion extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
 
@@ -41,11 +39,4 @@ object MinHashUnion extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
 
   /** Column form for DataFrame `.agg(...)`. */
   def column: TypedColumn[Seq[Long], Seq[Long]] = MinHashUnion.toColumn
-}
-
-object MinHashUtil {
-  /** Estimated Jaccard similarity between two MinHash sketches. */
-  def estJaccard(a: Seq[Long], b: Seq[Long]): Double =
-    if (a.isEmpty || b.isEmpty) 0.0
-    else a.zip(b).count { case (x, y) => x == y }.toDouble / math.min(a.length, b.length)
 }

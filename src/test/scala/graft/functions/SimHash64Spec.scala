@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Dedup, DedupOracles, TextOps}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Parity pins for the round-19 fused [[SimHash64]] expression: it must
-  * reproduce the nested-HOF formulation ([[Dedup.simhashHof]]) bit-for-
+  * reproduce the nested-HOF formulation ([[DedupOracles.simhashHof]]) bit-for-
   * bit — the fusion is a pure performance move and any drift would
   * silently re-key q43's full-corpus output.
   */
@@ -31,7 +31,7 @@ class SimHash64Spec extends SparkSpec {
     val rows = texts
       .select(col("id"),
         TextFunctions.simhash64(TextOps.tokens(col("text"))).as("fused"),
-        Dedup.simhashHof(col("text")).as("hof"))
+        DedupOracles.simhashHof(col("text")).as("hof"))
       .as[(Long, Option[Long], Option[Long])].collect()
     assert(rows.length == 8)
     rows.foreach { case (id, fused, hof) =>
@@ -53,7 +53,7 @@ class SimHash64Spec extends SparkSpec {
     assert(fused == hof, s"fused=$fused hof=$hof")
   }
 
-  // Dedup.simhashHof tokenizes a text column; replicate its HOF body over
+  // DedupOracles.simhashHof tokenizes a text column; replicate its HOF body over
   // an arbitrary token-array column for the null-element case.
   private def hofOverToks(toks: org.apache.spark.sql.Column) = {
     val bitSums = aggregate(

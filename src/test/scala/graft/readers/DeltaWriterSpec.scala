@@ -984,4 +984,15 @@ class DeltaWriterSpec extends SparkSpec {
     assert(pruned.select("id").as[Long].collect().toSet == (100L to 110L).toSet)
     assert(pruned.inputFiles.length < back.inputFiles.length)
   }
+
+  test("a delete that empties every file it touches commits its removes and no zero-row add") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("dwemptied").toString
+    DeltaWriter.write(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1), t)
+    assert(DeltaLog.snapshot(spark, t).liveFiles.size == 1)
+    assert(DeltaWriter.deleteWhere(spark, t, "id > 0") == 2L)
+    assert(DeltaLog.snapshot(spark, t).liveFiles.isEmpty)
+    assert(DeltaReader.read(spark, t).collect().isEmpty)
+    assert(DeltaReader.read(spark, t, versionAsOf = Some(0L)).count() == 2L)
+  }
 }

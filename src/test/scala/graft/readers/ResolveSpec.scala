@@ -242,4 +242,138 @@ class ResolveSpec extends SparkSpec {
       } finally pool.shutdown()
     }
   }
+
+  // ---- discover samples (Resolve.sample) --------------------------------
+
+  private def limited(fmt: String, path: String, opts: Map[String, String], n: Int): Seq[Row] =
+    Resolve.load(spark, fmt, path, opts).limit(n).collect().toSeq
+
+  test("a repeat discover of unchanged files serves its stored sample with no job") {
+    withDir { d =>
+      for ((fmt, path, opts) <- writeTables(d); n <- Seq(1, 2)) {
+        val want = limited(fmt, path, opts, n)
+        val (_, wantJobs) = jobsOf(limited(fmt, path, opts, n))
+        val (first, firstJobs) = jobsOf(Resolve.sample(spark, fmt, path, opts, n).collect().toSeq)
+        assert(first == want, s"$fmt $path n=$n")
+        assert(firstJobs == wantJobs, s"$fmt $path n=$n: the first action runs the limit job")
+        if (n == 1) assert(firstJobs == 1, s"$fmt $path")
+        assert(Resolve.sampledPaths.contains(path), s"$fmt $path")
+        val (again, againJobs) = jobsOf(Resolve.sample(spark, fmt, path, opts, n).collect().toSeq)
+        assert(again == want, s"$fmt $path n=$n")
+        assert(againJobs == 0, s"$fmt $path n=$n")
+      }
+    }
+  }
+
+  test("a rewritten, added or deleted file yields fresh sample rows") {
+    withDir { d =>
+      val single = new File(d, "s.parquet")
+      def writeSingle(ids: Seq[Int]): Unit = {
+        val tmp = new File(d, "tmp")
+        ids.toDF("a").coalesce(1).write.parquet(tmp.getPath)
+        val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
+        Files.move(part.toPath, single.toPath, StandardCopyOption.REPLACE_EXISTING)
+        rm(tmp)
+        SparkSpec.ageFiles(single)
+      }
+      writeSingle(Seq(1, 2))
+      val old = Resolve.sample(spark, "parquet", single.getPath, Map.empty, 10)
+      assert(old.collect().toSeq == Seq(Row(1), Row(2)))
+      writeSingle(Seq(7, 8, 9))
+      assert(Resolve.sample(spark, "parquet", single.getPath, Map.empty, 10).collect().toSeq ==
+        Seq(Row(7), Row(8), Row(9)))
+      // a query built after the rewrite over a frame taken before it
+      // realizes from the current files too
+      assert(old.select("a").collect().toSeq == Seq(Row(7), Row(8), Row(9)))
+
+      val js = new File(d, "j")
+      js.mkdirs()
+      def put(name: String, text: String): Unit = {
+        Files.write(new File(js, name).toPath, text.getBytes)
+        SparkSpec.ageFiles(js)
+      }
+      def sampled: Seq[String] = rows(Resolve.sample(spark, "json", js.getPath, Map.empty, 10))
+      put("one.json", """{"a":1}""" + "\n")
+      assert(sampled == Seq("[1]"))
+      assert(sampled == Seq("[1]"))
+      put("two.json", """{"a":2}""" + "\n")
+      assert(sampled == Seq("[1]", "[2]"))
+      Files.delete(new File(js, "one.json").toPath)
+      assert(sampled == Seq("[2]"))
+    }
+  }
+
+  test("a sample of files written inside the racy-mtime window is never stored") {
+    withDir { d =>
+      val p = new File(d, "fresh.parquet").getPath
+      Seq(1, 2).toDF("a").coalesce(1).write.parquet(p)
+      val want = limited("parquet", p, Map.empty, 10)
+      for (_ <- 1 to 2) {
+        val (got, jobs) = jobsOf(Resolve.sample(spark, "parquet", p, Map.empty, 10).collect().toSeq)
+        assert(got == want)
+        assert(jobs > 0)
+      }
+      assert(!Resolve.sampledPaths.contains(p))
+    }
+  }
+
+  test("different options, session conf or n never share a sample") {
+    withDir { d =>
+      val csv = new File(d, "t.csv").getPath
+      Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "name").coalesce(1)
+        .write.option("header", "true").csv(csv)
+      val untyped = Map("header" -> "true")
+      for (_ <- 1 to 2; opts <- Seq(csvOpts, untyped); n <- Seq(1, 2))
+        assert(Resolve.sample(spark, "csv", csv, opts, n).collect().toSeq == limited("csv", csv, opts, n),
+          s"$opts n=$n")
+      assert(Resolve.sample(spark, "csv", csv, csvOpts, 1).collect().toSeq == Seq(Row(1, "a")))
+      assert(Resolve.sample(spark, "csv", csv, untyped, 1).collect().toSeq == Seq(Row("1", "a")))
+
+      // the session time zone decides how an inferred timestamp parses
+      val ts = new File(d, "ts.csv")
+      Files.write(ts.toPath, "t\n2024-01-01 00:00:00\n".getBytes)
+      SparkSpec.ageFiles(d)
+      val key = "spark.sql.session.timeZone"
+      val prev = spark.conf.get(key)
+      try {
+        val seen = for (_ <- 1 to 2; tz <- Seq("UTC", "America/Los_Angeles")) yield {
+          spark.conf.set(key, tz)
+          val want = limited("csv", ts.getPath, csvOpts, 1)
+          assert(Resolve.sample(spark, "csv", ts.getPath, csvOpts, 1).collect().toSeq == want, tz)
+          tz -> want
+        }
+        assert(seen.toMap.values.toSet.size == 2, "the conf must change the bare sample")
+      } finally spark.conf.set(key, prev)
+    }
+  }
+
+  test("a sample over the byte cap is collected on every action and never stored") {
+    withDir { d =>
+      val p = new File(d, "wide.parquet").getPath
+      Seq((1, "x" * (512 * 1024))).toDF("id", "blob").coalesce(1).write.parquet(p)
+      SparkSpec.ageFiles(d)
+      val want = limited("parquet", p, Map.empty, 1)
+      for (_ <- 1 to 2) {
+        val (got, jobs) = jobsOf(Resolve.sample(spark, "parquet", p, Map.empty, 1).collect().toSeq)
+        assert(got == want)
+        assert(jobs == 1)
+      }
+      assert(!Resolve.sampledPaths.contains(p))
+    }
+  }
+
+  test("a filter over a discover frame applies to the sampled rows, after the limit") {
+    withDir { d =>
+      val p = new File(d, "ids.parquet").getPath
+      (0 until 100).toDF("id").coalesce(1).write.parquet(p)
+      SparkSpec.ageFiles(d)
+      for (cond <- Seq("id >= 50", "id % 2 = 0"); _ <- 1 to 2) {
+        val want = Resolve.load(spark, "parquet", p).limit(10).where(cond).collect().toSeq
+        val got = Resolve.sample(spark, "parquet", p, Map.empty, 10).where(cond).collect().toSeq
+        assert(got == want, cond)
+      }
+      assert(Resolve.sample(spark, "parquet", p, Map.empty, 10).where("id >= 50").collect().isEmpty)
+      assert(Resolve.sampledPaths.contains(p))
+    }
+  }
 }

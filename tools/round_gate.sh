@@ -2,7 +2,7 @@
 # One-command round ritual (VERDICT r18 #7): every closing gate in
 # sequence — schema sweep → full test suite → dual-SF verify+selfcheck
 # → gated bench → DuckDB baseline + paired table → dual-SF plan audit
-# diff — failing non-zero on ANY red gate, so the round's closing
+# diff → repo benchmark specs + smoke — failing non-zero on ANY red gate, so the round's closing
 # record is ONE artifact instead of five hand-run tools.
 #
 # Usage:
@@ -16,7 +16,7 @@
 #
 # Output: $OUT/record.txt (the committed closing record), plus every
 # sub-artifact ($OUT/verify_sf*/, bench_summary.json, duckdb.json,
-# PLANS_*.md, paired_table.md).
+# PLANS_*.md, paired_table.md, perfbench_*.json).
 set -u
 cd "$(dirname "$0")/.."
 OUT=${1:-target/round_gate}
@@ -38,11 +38,11 @@ gate() { # gate <name> <exitcode>
 
 note "round_gate @ $(git rev-parse --short HEAD) $(date -u +%FT%TZ) cpus=$SPARK_GRAFT_CPUS loadavg=$(cut -d' ' -f1 /proc/loadavg)"
 
-step "1/6 schema sweep (testdata drift vs committed manifest)"
+step "1/7 schema sweep (testdata drift vs committed manifest)"
 python3 tools/schema_sweep.py 2>&1 | tail -5 | tee -a "$REC"
 gate schema_sweep "${PIPESTATUS[0]}"
 
-step "2/6 full test suite"
+step "2/7 full test suite"
 if [ "${ROUND_GATE_SKIP_TESTS:-0}" = "1" ]; then
   note "SKIPPED (ROUND_GATE_SKIP_TESTS=1) — not a closing record"
 else
@@ -52,7 +52,7 @@ else
   gate sbt_test "$rc"
 fi
 
-step "3/6 dual-SF verify + selfcheck (the correctness gate)"
+step "3/7 dual-SF verify + selfcheck (the correctness gate)"
 for sf in sf0.01 sf0.1; do
   vout="$OUT/verify_$sf"
   sbt -batch "runMain graft.Verify /root/testdata/$sf $vout" > "$OUT/verify_$sf.log" 2>&1
@@ -65,7 +65,7 @@ for sf in sf0.01 sf0.1; do
   gate "selfcheck_$sf" "$rc"
 done
 
-step "4/6 gated bench (concurrent contract mode, sf0.1)"
+step "4/7 gated bench (concurrent contract mode, sf0.1)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
 SPARK_GRAFT_BENCH_SUMMARY="$OUT/bench_summary.json" \
   sbt -batch "runMain graft.Bench" > "$OUT/bench.log" 2>&1
@@ -89,7 +89,7 @@ if drift:
 EOF
 gate bench_clean "${PIPESTATUS[0]}"
 
-step "5/6 DuckDB baseline + ratio (2x contract) + paired table"
+step "5/7 DuckDB baseline + ratio (2x contract) + paired table"
 python3 tools/duckdb_times.py /root/testdata/sf0.1 "$OUT/verify_sf0.1" "$OUT/duckdb.json" \
   > /dev/null 2>&1
 gate duckdb_baseline "$?"
@@ -122,7 +122,7 @@ sys.exit(0 if ratio <= 2.0 else 1)
 EOF
 gate ratio_contract "${PIPESTATUS[0]}"
 
-step "6/6 plan audit: dual-SF diff + drift vs committed PLANS.md"
+step "6/7 plan audit: dual-SF diff + drift vs committed PLANS.md"
 sbt -batch "runMain graft.tools.PlanAudit /root/testdata/sf0.01 $OUT/PLANS_sf0.01.md" \
   > "$OUT/planaudit_sf0.01.log" 2>&1
 gate planaudit_sf0.01 "$?"
@@ -146,6 +146,28 @@ else
   note "GATE FAIL: plans drifted vs committed PLANS.md — review $OUT/plans_drift.txt, then refresh+commit PLANS.md/PLANS_sf0.1.md"
   head -10 "$OUT/plans_drift.txt" | tee -a "$REC"; FAIL=1
 fi
+
+step "7/7 repo benchmark: perfbench specs + a 1 s smoke of each BENCHMARK.json workload"
+(cd perfbench && sbt -batch test) > "$OUT/perfbench_test.log" 2>&1
+rc=$?
+grep -E "^\[info\] (Tests:|All tests)" "$OUT/perfbench_test.log" | tail -2 | tee -a "$REC"
+gate perfbench_test "$rc"
+for w in $(python3 -c 'import json; print(" ".join(w["name"] for w in json.load(open("BENCHMARK.json"))["workloads"]))'); do
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 1 --trace 0 \
+    > "$OUT/perfbench_$w.json" 2> "$OUT/perfbench_$w.log"
+  rc=$?
+  python3 - "$OUT/perfbench_$w.json" "$w" "$rc" <<'EOF' 2>&1 | tee -a "$REC"
+import json, sys
+path, w, rc = sys.argv[1], sys.argv[2], int(sys.argv[3])
+try:
+    r = json.loads(open(path).read().strip().splitlines()[-1])
+except Exception as e:
+    print(f"perfbench {w}: no result (run.py exit {rc}): {e}"); sys.exit(1)
+print(f"perfbench {w}: correct={r.get('correct')} failed={r.get('failed')}/{r.get('attempted')}")
+sys.exit(0 if rc == 0 and r.get("correct") is True and r.get("failed") == 0 else 1)
+EOF
+  gate "perfbench_smoke_$w" "${PIPESTATUS[0]}"
+done
 
 echo
 if [ "$FAIL" -ne 0 ]; then
